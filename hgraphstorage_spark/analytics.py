@@ -1,23 +1,63 @@
-"""Graph analytics over a snapshot: degrees, connected components, PageRank,
-multi-hop BFS — the GraphX/Pregel-style layer (SURVEY.md §7 M5).
+"""Graph analytics over a snapshot: degrees, components, PageRank,
+traversal distances, centralities, cohesion — the GraphX/Pregel-style
+layer (SURVEY.md §7 M5).
 
 The reference has no analytics surface (it is an OLTP traversal engine);
 these are the north-star extension. Implemented as DataFrame-Pregel loops
-rather than the graphframes package (not available in this container) —
-the same iterated-join shape GraphX lowers to, with lineage control:
+rather than the graphframes package (an extra JVM dependency) — the same
+iterated-join shape GraphX lowers to. Three shared loops carry the
+iterative algorithms:
 
-- every iteration ends in ``localCheckpoint`` to truncate lineage
-  (SURVEY.md §7 "Pregel lineage blowup");
-- frontier joins broadcast when the frontier is small (BFS);
-- convergence checks are one tiny aggregate per iteration.
+- :func:`pregel`, one superstep = edge ⋈ state → aggregate → update over
+  one state column: ``connected_components`` (HashMin) and
+  ``label_propagation``;
+- ``_frontier_bfs``, the layered frontier expansion (expand, anti-join
+  the visited set, tag the hop): ``shortest_paths`` — and through it
+  ``bfs``, ``harmonic_centrality`` and ``diameter_estimate`` — and the
+  sigma-counting forward phase of ``betweenness``;
+- ``_hyperball_registers``, the HLL register rounds of ``hyperball`` and
+  ``hyperball_centrality``.
+
+PageRank (dangling mass), alternating-star CC, SCC, k-core, k-truss, the
+weighted Bellman-Ford relaxation and HITS keep their own loops: their
+rounds are not a message → aggregate → update step over one state
+column. ``_edge_view`` is the one edge prologue (label filter,
+projection, reverse direction when undirected, persist). Every loop ends
+its round in ``localCheckpoint`` to truncate lineage (SURVEY.md §7
+"Pregel lineage blowup"); a convergence check is one ``limit(1).count()``
+that also materializes the round's lazy checkpoint.
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hgraphstorage_spark.snapshot import GraphSnapshot
+
+
+def _edge_view(
+    snap: GraphSnapshot,
+    labels=(),
+    directed: bool = True,
+    weight=None,
+    persist: bool = True,
+) -> DataFrame:
+    """The edge prologue of the iterative algorithms: keep the edges whose
+    label is in ``labels`` (empty or None = all labels), project
+    (src, dst[, w = ``weight``]) and add the reverse direction when
+    undirected. Persisted by default — the static input every round joins (persist:
+    evictable, spills at scale, the GraphX idiom); uncached, each round
+    would re-scan the edge source."""
+    edges = snap.edges
+    if labels:
+        edges = edges.filter(F.col("label").isin(list(labels)))
+    ed = edges.select("src", "dst", *([weight.alias("w")] if weight is not None else []))
+    if not directed:
+        ed = ed.unionAll(ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *ed.columns[2:]))
+    return ed.persist() if persist else ed
 
 
 def degrees(snap: GraphSnapshot) -> DataFrame:
@@ -55,46 +95,22 @@ def degrees(snap: GraphSnapshot) -> DataFrame:
 
 def connected_components(snap: GraphSnapshot, max_iter: int = 50) -> DataFrame:
     """Undirected connected components by iterative min-id propagation
-    (the classic Pregel formulation; HashMin). Returns (id, component)
-    where component = min node id in the component.
+    (the classic Pregel formulation; HashMin) on :func:`pregel`. Returns
+    (id, component) where component = min node id in the component.
 
-    Each round: component ← min(component, min over neighbors' components).
-    Converges in O(diameter) rounds; each round is two shuffles (join +
-    agg). ``localCheckpoint`` truncates the growing plan per round.
+    Each superstep: component ← min(component, min over neighbors'
+    components). Converges in O(diameter) supersteps of one Spark job
+    each; warns when ``max_iter`` runs out first.
     """
-    # undirected neighbor list via both edge directions — materialized once
-    # (localCheckpoint), else every round re-scans the edge source
-    nbrs = (
-        snap.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionAll(snap.edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .persist()
-    )
-    comp = snap.nodes.select("id", F.col("id").alias("component")).localCheckpoint()
-    for _ in range(max_iter):
-        # neighbor minimum per node
-        nbr_min = (
-            nbrs.join(comp.withColumnRenamed("id", "b"), "b")
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        # lazy checkpoint: the convergence count below is the materializing
-        # action, so each round runs one job, not two (eager + count)
-        updated = (
-            comp.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("component"), F.coalesce("nbr_component", F.col("component"))).alias(
-                    "new_component"
-                ),
-                "component",
-            )
-        ).localCheckpoint(eager=False)
-        changed = updated.filter(F.col("new_component") < F.col("component")).limit(1).count()
-        comp = updated.select("id", F.col("new_component").alias("component"))
-        if changed == 0:
-            break
-    nbrs.unpersist()
-    return comp
+    return pregel(
+        snap,
+        initial=lambda nodes: F.col("id"),
+        message=lambda s: s,
+        aggregate=F.min,
+        update=lambda old, agg: F.least(old, F.coalesce(agg, old)),
+        max_iter=max_iter,
+        directed=False,
+    ).withColumnRenamed("state", "component")
 
 
 def connected_components_alternating(snap: GraphSnapshot, max_iter: int = 30) -> DataFrame:
@@ -255,18 +271,17 @@ def pregel(
       aggregated message (agg is NULL when no messages arrived)
 
     Each superstep = one join + one aggregate + one state join, with
-    ``localCheckpoint`` truncating lineage. Convergence = no state changed
-    (one tiny count per superstep; disable for fixed-iteration algorithms).
-    Returns (id, state).
+    ``localCheckpoint`` truncating lineage. With ``check_convergence`` a
+    superstep is ONE Spark job: the new state is checkpointed lazily and
+    the "any state changed" ``limit(1).count()`` materializes it; the loop
+    stops at the first superstep that changes nothing and emits a
+    ``RuntimeWarning`` if ``max_iter`` runs out while the state is still
+    changing. Without it (fixed-iteration algorithms) every superstep
+    checkpoints eagerly. Returns (id, state).
     """
-    edges = snap.edges.select("src", "dst")
-    if not directed:
-        edges = edges.unionAll(snap.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # cache the static input once (persist: evictable, spills at scale —
-    # the GraphX idiom); an uncached plan would re-scan the edge source
-    # every superstep
-    edges = edges.persist()
+    edges = _edge_view(snap, directed=directed)
     state = snap.nodes.select("id", initial(snap.nodes).alias("state")).localCheckpoint()
+    changed = 0
     for _ in range(max_iter):
         msgs = (
             edges.join(state.withColumnRenamed("id", "src"), "src")
@@ -274,18 +289,26 @@ def pregel(
             .groupBy("id")
             .agg(aggregate(F.col("msg")).alias("agg_msg"))
         )
-        new_state = (
-            state.join(msgs, "id", "left")
-            .select("id", F.col("state").alias("old"), update(F.col("state"), F.col("agg_msg")).alias("state"))
-            .localCheckpoint()
+        new_state = state.join(msgs, "id", "left").select(
+            "id", F.col("state").alias("old"), update(F.col("state"), F.col("agg_msg")).alias("state")
         )
-        if check_convergence:
-            changed = new_state.filter(~F.col("state").eqNullSafe(F.col("old"))).limit(1).count()
-            state = new_state.select("id", "state")
-            if changed == 0:
-                break
-        else:
-            state = new_state.select("id", "state")
+        if not check_convergence:
+            state = new_state.select("id", "state").localCheckpoint()
+            continue
+        new_state = new_state.localCheckpoint(eager=False)  # materialized by the count below
+        changed = new_state.filter(~F.col("state").eqNullSafe(F.col("old"))).limit(1).count()
+        state = new_state.select("id", "state")
+        if changed == 0:
+            break
+    else:
+        if changed:
+            warnings.warn(
+                f"pregel: state still changing after max_iter={max_iter} supersteps — "
+                "the result is not a fixpoint. Raise max_iter (propagation needs one "
+                "superstep per hop of the longest path it must cross).",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     edges.unpersist()
     return state
 
@@ -355,6 +378,34 @@ def triangle_count(snap: GraphSnapshot) -> DataFrame:
     )
 
 
+def _frontier_bfs(seeds: DataFrame, expand, keys: list, max_hops: int):
+    """The layered frontier loop shared by ``shortest_paths`` and the
+    forward phase of ``betweenness``. ``seeds`` is hop 0 and carries a
+    ``dist`` column; ``expand(frontier)`` returns the next layer's
+    candidate rows (every seeds column but ``dist``). Candidates already
+    visited (anti-join on ``keys``) drop, the rest are tagged
+    ``dist = hop``. Each hop is one Spark job: the layer is checkpointed
+    lazily and its ``limit(1).count()`` emptiness check materializes it.
+
+    Returns (visited, frontier, depth): every reached row, the deepest
+    layer if ``max_hops`` ran out (None after a clean fixpoint — no
+    unvisited successors remain) and that layer's hop."""
+    visited = frontier = seeds.localCheckpoint()
+    depth = 0
+    for hop in range(1, max_hops + 1):
+        nxt = (
+            expand(frontier)
+            .join(visited.select(*keys), keys, "left_anti")
+            .select(*[F.lit(hop).alias("dist") if c == "dist" else c for c in seeds.columns])
+            .localCheckpoint(eager=False)  # materialized by the count below
+        )
+        if nxt.limit(1).count() == 0:
+            return visited, None, depth
+        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
+        frontier, depth = nxt, hop
+    return visited, frontier, depth
+
+
 def shortest_paths(
     snap: GraphSnapshot,
     landmarks: list,
@@ -366,101 +417,52 @@ def shortest_paths(
     GraphFrames ``shortestPaths`` shape). Returns (id, landmark, dist);
     unreachable (node, landmark) pairs are absent.
 
-    All landmarks run in ONE multi-source BFS: state rows are
-    (id, landmark, dist) and each round expands the whole frontier with a
-    single edge join + min-aggregate, so the edge table is scanned once
-    per hop rather than once per landmark per hop."""
-    edges = snap.edges
-    if labels:
-        edges = edges.filter(F.col("label").isin(list(labels)))
-    edges = edges.select("src", "dst")
-    if not directed:
-        edges = edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    edges = edges.persist()  # joined every hop
+    All landmarks run in ONE multi-source BFS (``_frontier_bfs``): state
+    rows are (id, landmark, dist) and each hop expands the whole frontier
+    with a single edge join, so the edge table is scanned once per hop
+    rather than once per landmark per hop."""
+    edges = _edge_view(snap, labels, directed)
     spark = snap.nodes.sparkSession
     seeds = spark.createDataFrame([(x, x, 0) for x in landmarks], "id long, landmark long, dist int")
-    visited = seeds.localCheckpoint()
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.withColumnRenamed("id", "src")
-            .join(edges, "src")
-            .select(F.col("dst").alias("id"), "landmark")
-            .distinct()
-            .join(visited.select("id", "landmark"), ["id", "landmark"], "left_anti")
-            .select("id", "landmark", F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=False)  # materialized by the count below
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
-        frontier = nxt
+    visited, _, _ = _frontier_bfs(
+        seeds,
+        lambda f: f.withColumnRenamed("id", "src")
+        .join(edges, "src")
+        .select(F.col("dst").alias("id"), "landmark")
+        .distinct(),
+        ["id", "landmark"],
+        max_hops,
+    )
     edges.unpersist()
     return visited
 
 
 def label_propagation(snap: GraphSnapshot, max_iter: int = 5) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et
-    al. 2007; the GraphFrames ``labelPropagation`` shape). Each round every
-    node adopts the most frequent label among its (undirected) neighbors,
-    ties broken by the smallest label — deterministic, unlike the
-    randomized original. Fixed iteration count (sync LPA may oscillate on
-    bipartite structures rather than converge). Returns (id, community).
-
-    Per round: one edge join + two aggregates (count per (node, label),
-    then arg-max via ``max_by`` on a (count, -label) struct) — no windows,
-    so partial aggregation stays map-side."""
-    nbrs = (
-        snap.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionAll(snap.edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .persist()  # static per-round input: cache once, not one scan/round
-    )
-    state = snap.nodes.select("id", F.col("id").alias("community")).localCheckpoint()
-    for _ in range(max_iter):
-        votes = (
-            nbrs.join(state.withColumnRenamed("id", "b"), "b")
-            .groupBy(F.col("a").alias("id"), "community")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        winner = votes.groupBy("id").agg(
-            F.max_by("community", F.struct(F.col("n"), (-F.col("community")).alias("tb"))).alias("new_community")
-        )
-        state = (
-            state.join(winner, "id", "left")
-            .select("id", F.coalesce("new_community", F.col("community")).alias("community"))
-            .localCheckpoint()
-        )
-    nbrs.unpersist()
-    return state
+    al. 2007; the GraphFrames ``labelPropagation`` shape) on
+    :func:`pregel`. Each round every node adopts the most frequent label
+    among its (undirected) neighbors, ties broken by the smallest label
+    (``mode(deterministic=True)``) — deterministic, unlike the randomized
+    original. Fixed iteration count (sync LPA may oscillate on bipartite
+    structures rather than converge). Returns (id, community)."""
+    return pregel(
+        snap,
+        initial=lambda nodes: F.col("id"),
+        message=lambda s: s,
+        aggregate=lambda m: F.mode(m, deterministic=True),
+        update=lambda old, agg: F.coalesce(agg, old),
+        max_iter=max_iter,
+        directed=False,
+        check_convergence=False,
+    ).withColumnRenamed("state", "community")
 
 
 def bfs(snap: GraphSnapshot, source_id: int, max_hops: int = 10, labels: tuple = ()) -> DataFrame:
     """Multi-hop BFS: (id, hops) for nodes reachable from source within
-    max_hops along (optionally label-filtered) out-edges. Iterated frontier
-    joins with broadcast frontier (SURVEY.md §4 heuristic)."""
-    edges = snap.edges
-    if labels:
-        edges = edges.filter(F.col("label").isin(list(labels)))
-    edges = edges.select("src", "dst").persist()  # probed every hop
-    spark = snap.nodes.sparkSession
-    visited = spark.createDataFrame([(source_id, 0)], "id long, hops int").localCheckpoint()
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            F.broadcast(frontier.select(F.col("id").alias("src")))
-            .join(edges, "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .select("id", F.lit(hop).alias("hops"))
-            .localCheckpoint(eager=False)  # materialized by the count below
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    edges.unpersist()
-    return visited
+    max_hops along (optionally label-filtered) out-edges — the
+    single-landmark directed :func:`shortest_paths`."""
+    sp = shortest_paths(snap, [source_id], max_hops=max_hops, labels=labels, directed=True)
+    return sp.select("id", F.col("dist").alias("hops"))
 
 
 def k_core(snap: GraphSnapshot, k: int = 3, max_rounds: int = 100) -> DataFrame:
@@ -525,8 +527,10 @@ def aggregate_messages(
     Shape at scale: two hash joins to hydrate the triplet view (only the
     node columns the messages actually reference survive pruning), then
     one shuffle keyed by receiving node id with map-side partial
-    aggregation. Every Pregel-style algorithm above (degrees, CC,
-    PageRank, SSSP) is a loop over exactly this primitive."""
+    aggregation. It is a one-round primitive: no algorithm here loops
+    over it. :func:`pregel` runs the same send → aggregate step per
+    superstep over the bare (src, dst) edge view (no triplet hydration),
+    and ``degrees``/``pagerank`` write their own joins."""
     if msg_to_dst is None and msg_to_src is None:
         raise ValueError("at least one of msg_to_dst / msg_to_src is required")
     from hgraphstorage_spark.pipeline.state import track
@@ -604,10 +608,8 @@ def random_walks(
     shrinks or holds; edges scanned via the src-keyed join) and one
     min-by aggregate keyed by walk_id. No windows, no driver loops;
     walk_len is the only sequential dimension."""
-    edges = snap.edges
-    if labels:
-        edges = edges.filter(F.col("label").isin(list(labels)))
-    edges = edges.select("src", "dst")
+    # not persisted: the returned walks stay lazy and still read the edges
+    edges = _edge_view(snap, labels, persist=False)
     frontier = start_nodes.select(
         F.col("id").alias("walk_id"), F.col("id").alias("node")
     )
@@ -820,16 +822,8 @@ def weighted_shortest_paths(
 
     ``weight_col``: Column over the edge rows (default 1 = hop count).
     Returns (id, landmark, cost)."""
-    edges = snap.edges
-    if labels:
-        edges = edges.filter(F.col("label").isin(list(labels)))
     w = (weight_col if weight_col is not None else F.lit(1)).cast("long")
-    ed = edges.select("src", "dst", w.alias("w"))
-    if not directed:
-        ed = ed.unionAll(
-            ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-    ed = ed.persist()
+    ed = _edge_view(snap, labels, directed, weight=w)
     spark = snap.nodes.sparkSession
     state = spark.createDataFrame(
         [(x, x, 0) for x in landmarks], "id long, landmark long, cost long"
@@ -863,9 +857,9 @@ def betweenness(
     full betweenness (Brandes-Pich 2007) — exact when ``landmarks`` is
     every node.
 
-    Forward phase: one layered multi-source BFS carrying shortest-path
-    COUNTS (sigma) — per hop, one edge join + a (landmark, node) keyed
-    sum, all landmarks in one frame. Backward phase: dependency
+    Forward phase: one layered multi-source BFS (``_frontier_bfs``)
+    carrying shortest-path COUNTS (sigma) — per hop, one edge join + a
+    (landmark, node) keyed sum, all landmarks in one frame. Backward phase: dependency
     delta(v) = sum over successors w of sigma_v/sigma_w * (1 + delta_w),
     processed one DISTANCE LAYER at a time from the deepest layer in —
     each layer is one join against the successor layer's deltas. Rounds
@@ -886,38 +880,28 @@ def betweenness(
     ``max_hops`` >= the reached diameter the accumulation is exact.
 
     Returns (id, betweenness DECIMAL(18,6))."""
-    edges = snap.edges
-    if labels:
-        edges = edges.filter(F.col("label").isin(list(labels)))
     # SIMPLE-graph semantics (the textbook definition): parallel edges
     # collapse, self-loops drop — otherwise sigma counts each parallel
     # edge as a distinct shortest path
-    ed = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if not directed:
-        ed = ed.unionAll(ed.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    ed = ed.distinct().persist()
+    ed = (
+        _edge_view(snap, labels, directed, persist=False)
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+        .persist()
+    )
     spark = snap.nodes.sparkSession
-    visited = spark.createDataFrame(
+    seeds = spark.createDataFrame(
         [(x, x, 0, 1) for x in landmarks], "lm long, id long, dist int, sigma long"
-    ).localCheckpoint()
-    frontier = visited
-    depth = 0
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.withColumnRenamed("id", "src")
-            .join(ed, "src")
-            .groupBy("lm", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(visited.select("lm", "id"), ["lm", "id"], "left_anti")
-            .select("lm", "id", F.lit(hop).alias("dist"), "sigma")
-            .localCheckpoint(eager=False)
-        )
-        if nxt.limit(1).count() == 0:
-            frontier = None  # clean fixpoint: no unvisited successors remain
-            break
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-        depth = hop
+    )
+    visited, frontier, depth = _frontier_bfs(
+        seeds,
+        lambda f: f.withColumnRenamed("id", "src")
+        .join(ed, "src")
+        .groupBy("lm", F.col("dst").alias("id"))
+        .agg(F.sum("sigma").alias("sigma")),
+        ["lm", "id"],
+        max_hops,
+    )
     if frontier is not None:
         # max_hops exhausted with a live frontier: if it still has
         # unvisited successors, the deepest layer's deltas seed at 0
@@ -932,8 +916,6 @@ def betweenness(
             .count()
         )
         if more:
-            import warnings
-
             warnings.warn(
                 f"betweenness: BFS truncated at max_hops={max_hops} with reachable "
                 "nodes beyond — deltas are a TRUNCATED-HORIZON estimate (upstream "
@@ -1280,6 +1262,33 @@ def modularity(snap: GraphSnapshot, communities: DataFrame) -> DataFrame:
     )
 
 
+def _hyperball_registers(snap: GraphSnapshot, rounds: int, p: int, labels):
+    """The HyperBall register loop shared by :func:`hyperball` and
+    :func:`hyperball_centrality`: yields the (id, bucket, reg) HLL
+    registers of every ball B_0..B_rounds. B_0 sketches each node's own
+    id; round t merges each node's registers with its out-neighbors'
+    B_{t-1} — an HLL union is a per-(node, bucket) MAX, so a round is one
+    join + one map-side-combined agg, checkpointed eagerly."""
+    from hgraphstorage_spark.functions.stats import hll_sketch
+
+    edges = _edge_view(snap, labels)
+    regs = hll_sketch(snap.nodes.select("id"), "id", group_cols=["id"], p=p).localCheckpoint(eager=True)
+    yield regs
+    for _ in range(rounds):
+        flowed = (
+            edges.join(regs.withColumnRenamed("id", "_w"), F.col("dst") == F.col("_w"))
+            .select(F.col("src").alias("id"), "bucket", "reg")
+        )
+        regs = (
+            regs.unionByName(flowed)
+            .groupBy("id", "bucket")
+            .agg(F.max("reg").alias("reg"))
+            .localCheckpoint(eager=True)
+        )
+        yield regs
+    edges.unpersist()
+
+
 def hyperball(
     snap: GraphSnapshot,
     rounds: int = 3,
@@ -1311,14 +1320,7 @@ def hyperball(
     ball sizes) + one keyed max agg, localCheckpoint-truncated; the
     per-round NF is a 1-row sum action (the convergence-action
     pattern)."""
-    from hgraphstorage_spark.functions.stats import hll_estimate, hll_sketch
-
-    edges = snap.edges
-    if labels is not None:
-        edges = edges.filter(F.col("label").isin(list(labels)))
-    edges = edges.select("src", "dst")
-    nodes = snap.nodes.select("id")
-    regs = hll_sketch(nodes, "id", group_cols=["id"], p=p).localCheckpoint(eager=True)
+    from hgraphstorage_spark.functions.stats import hll_estimate
 
     def nf(r: DataFrame):
         est = hll_estimate(r, group_cols=["id"], p=p)
@@ -1326,21 +1328,8 @@ def hyperball(
             F.sum("n_distinct_est").cast("decimal(28,4)").alias("nf_est")
         ).collect()[0]["nf_est"]
 
-    out = [(0, nf(regs))]
-    for t in range(1, rounds + 1):
-        flowed = (
-            edges.join(regs.withColumnRenamed("id", "_w"), F.col("dst") == F.col("_w"))
-            .select(F.col("src").alias("id"), "bucket", "reg")
-        )
-        regs = (
-            regs.unionByName(flowed)
-            .groupBy("id", "bucket")
-            .agg(F.max("reg").alias("reg"))
-            .localCheckpoint(eager=True)
-        )
-        out.append((t, nf(regs)))
-    spark = snap.nodes.sparkSession
-    return spark.createDataFrame(out, "round int, nf_est decimal(28,4)")
+    out = [(t, nf(regs)) for t, regs in enumerate(_hyperball_registers(snap, rounds, p, labels))]
+    return snap.nodes.sparkSession.createDataFrame(out, "round int, nf_est decimal(28,4)")
 
 
 def hyperball_centrality(
@@ -1368,33 +1357,12 @@ def hyperball_centrality(
     max, state O(n·2^p)) plus `rounds` id-keyed joins of n-row estimate
     frames — this is how closeness/harmonic rankings are computed on
     graphs where all-pairs BFS is unthinkable."""
-    from hgraphstorage_spark.functions.stats import hll_estimate, hll_sketch
+    from hgraphstorage_spark.functions.stats import hll_estimate
 
-    edges = snap.edges
-    if labels is not None:
-        edges = edges.filter(F.col("label").isin(list(labels)))
-    edges = edges.select("src", "dst")
-    nodes = snap.nodes.select("id")
-    regs = hll_sketch(nodes, "id", group_cols=["id"], p=p).localCheckpoint(eager=True)
-
-    def est(r: DataFrame, name: str) -> DataFrame:
-        return hll_estimate(r, group_cols=["id"], p=p).select(
-            "id", F.col("n_distinct_est").alias(name)
-        )
-
-    acc = est(regs, "b0")
-    for t in range(1, rounds + 1):
-        flowed = (
-            edges.join(regs.withColumnRenamed("id", "_w"), F.col("dst") == F.col("_w"))
-            .select(F.col("src").alias("id"), "bucket", "reg")
-        )
-        regs = (
-            regs.unionByName(flowed)
-            .groupBy("id", "bucket")
-            .agg(F.max("reg").alias("reg"))
-            .localCheckpoint(eager=True)
-        )
-        acc = acc.join(est(regs, f"b{t}"), "id")
+    acc = None
+    for t, regs in enumerate(_hyperball_registers(snap, rounds, p, labels)):
+        est = hll_estimate(regs, group_cols=["id"], p=p).select("id", F.col("n_distinct_est").alias(f"b{t}"))
+        acc = est if acc is None else acc.join(est, "id")
     expr = None
     for t in range(1, rounds + 1):
         diff = F.col(f"b{t}").cast("double") - F.col(f"b{t - 1}").cast("double")

@@ -44,6 +44,23 @@ class TestConnectedComponents:
         assert comp[4] == comp[5] == 4
         assert comp[6] == 6
 
+    def test_warns_when_max_iter_runs_out(self, spark):
+        """A 1..6 path needs 5 changing supersteps: with max_iter=2 the
+        state is still changing when the budget ends, which must not pass
+        silently; with the default budget it converges without a warning."""
+        import warnings
+
+        eng = GraphEngine(spark)
+        eng.add_nodes([("N", {}) for _ in range(6)])
+        eng.add_edges([(i, i + 1, "e", {}) for i in range(1, 6)])
+        eng.commit()
+        with pytest.warns(RuntimeWarning, match="max_iter=2"):
+            connected_components(eng.current, max_iter=2).collect()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            comp = {r["id"]: r["component"] for r in connected_components(eng.current).collect()}
+        assert comp == {i: 1 for i in range(1, 7)}
+
 
 class TestAlternatingComponents:
     @pytest.mark.slow
@@ -168,6 +185,19 @@ class TestLabelPropagation:
         assert len({comm[i] for i in range(1, 6)}) == 1
         assert len({comm[i] for i in range(6, 11)}) == 1
         assert comm[1] != comm[10]
+
+    def test_tie_breaks_to_smallest_label(self, spark):
+        """One round from id labels: node 1 hears 4 twice (parallel
+        edges), 3 twice (one edge each way) and 2 once — 3 and 4 tie on
+        count and the smaller, 3, must win; every other node hears only 1."""
+        from hgraphstorage_spark.analytics import label_propagation
+
+        eng = GraphEngine(spark)
+        eng.add_nodes([("N", {}) for _ in range(4)])
+        eng.add_edges([(1, 4, "e", {}), (1, 4, "e", {}), (1, 2, "e", {}), (3, 1, "e", {}), (1, 3, "e", {})])
+        eng.commit()
+        comm = {r["id"]: r["community"] for r in label_propagation(eng.current, max_iter=1).collect()}
+        assert comm == {1: 3, 2: 1, 3: 1, 4: 1}
 
 
 class TestKCore:
@@ -724,6 +754,10 @@ class TestHyperBall:
         # with only 1->2, node 2's ball stays size 1; with both edges
         # each ball reaches both nodes
         assert got[1] < both[1]
+        # an empty label set means every label, as everywhere else
+        empty = {r["round"]: float(r["nf_est"]) for r in
+                 hyperball(snap, rounds=1, p=8, labels=()).collect()}
+        assert empty == both
 
     @pytest.mark.slow
     def test_centrality_structure_on_forest(self, spark):
