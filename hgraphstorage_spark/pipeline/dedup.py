@@ -9,12 +9,12 @@ Scale design notes:
   linear in docs + output pairs, never O(n²);
 - n-gram Jaccard is the exact (quadratic-within-block) verifier — use
   only blocked (or on LSH candidates);
-- all hashing is xxhash64 (JVM built-in, codegen'd) — no Python UDFs.
+- all hashing is xxhash64 (JVM built-in, codegen'd); only the MinHash
+  k-permutation min is an Arrow UDF (over `pipeline.kernels`).
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type hints resolve in module globals
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -153,31 +153,26 @@ def md5_long(*cols) -> F.Column:
     ).cast("long")
 
 
-def _with_signature(
-    sh_df: DataFrame, k: int, hash_mode: str = "xxhash64", engine: str = "arrow"
-) -> DataFrame:
+def _with_signature(sh_df: DataFrame, k: int, hash_mode: str = "xxhash64") -> DataFrame:
     """Append `sig ARRAY<BIGINT>[k]` (k-permutation MinHash) to a
     (doc_id, sh, …) frame — pure narrow integer work, zero shuffle.
 
     Classic 2-universal construction: two base hashes per shingle reduced
     mod a 31-bit prime, then hash_i = (h1 + i·h2) mod P — overflow-free
-    under ANSI arithmetic (i·h2 < 2^37).
+    (i·h2 < 2^37).
 
-    ``engine="arrow"`` (default) evaluates the k-permutation min as one
-    vectorized Arrow UDF over the per-shingle (a, b) arrays. Higher-order
-    functions are CodegenFallback, so the nested transform+array_min form
-    ran interpreted — O(k·shingles) lambda dispatches per doc (k=64). The
-    base hashes (xxhash64 / md5-derived) stay JVM-side; only two int64
-    arrays cross the boundary, and every permutation value is exact
-    integer arithmetic (a + i·b < 2^37, then mod P — numpy int64 `%` on
-    non-negative operands == pmod), so the signature is bit-identical to
-    the fold (pinned by test_with_signature_arrow_equals_fold).
-    ``engine="sql"`` keeps the nested-HOF form — the expression the
-    DuckDB oracle mirrors. The per-shingle (a, b) struct array is
-    materialized in its own projection so the min passes read an
-    attribute instead of re-evaluating the transform k times (no CSE
-    inside lambdas; multi-use non-cheap alias blocks CollapseProject).
+    The base hashes (xxhash64 / md5-derived) stay JVM-side; the
+    k-permutation min is one vectorized Arrow UDF over the per-shingle
+    (a, b) arrays. A higher-order-function fold here is CodegenFallback —
+    O(k·shingles) interpreted lambda dispatches per doc (k=64). Every
+    permutation value is exact integer arithmetic (a + i·b < 2^37, then
+    numpy int64 `%` on non-negative operands == pmod). An empty or NULL
+    shingle array gives k NULL elements (the min of nothing).
     """
+    import numpy as np
+
+    from hgraphstorage_spark.pipeline.kernels import matrix_list, ragged
+
     P = MINHASH_P
     if hash_mode == "md5":
         # b from the UPPER bits of the same 60-bit shingle hash (a uses
@@ -188,68 +183,23 @@ def _with_signature(
         second = lambda h: F.pmod(F.shiftright(h, 29), F.lit(P))  # noqa: E731
     else:
         second = lambda h: F.pmod(F.xxhash64(h, F.lit(1)), F.lit(P))  # noqa: E731
-    with_ab = sh_df.withColumn(
-        "_ab",
-        F.transform(
-            F.col("sh"),
-            lambda h: F.struct(
-                F.pmod(h, F.lit(P)).alias("a"),
-                second(h).alias("b"),
-            ),
-        ),
+
+    @F.arrow_udf("array<bigint>")
+    def _sig(a_arr, b_arr):
+        a, lens = ragged(a_arr)
+        b, _ = ragged(b_arr)
+        nonempty = lens > 0
+        mins = np.zeros((len(lens), k), dtype=np.int64)
+        if nonempty.any():
+            starts = (np.cumsum(lens) - lens)[nonempty]
+            for i in range(k):
+                mins[nonempty, i] = np.minimum.reduceat((a + i * b) % P, starts)
+        return matrix_list(mins, ~nonempty)
+
+    sh = F.col("sh")
+    return sh_df.withColumn(
+        "sig", _sig(F.transform(sh, lambda h: F.pmod(h, F.lit(P))), F.transform(sh, second))
     )
-    ab = F.col("_ab")
-    if engine == "arrow":
-        import numpy as np
-
-        @F.pandas_udf("array<bigint>")
-        def _sig(a_s: pd.Series, b_s: pd.Series) -> pd.Series:
-            a_arrs = a_s.to_numpy()
-            n = len(a_arrs)
-            if n == 0:
-                return pd.Series([], dtype=object)
-            b_arrs = b_s.to_numpy()
-            lens = np.fromiter(
-                (0 if a is None else len(a) for a in a_arrs), dtype=np.int64, count=n
-            )
-            nonempty = lens > 0
-            out = np.empty(n, dtype=object)
-            if nonempty.any():
-                flat_a = np.concatenate(
-                    [np.asarray(a, dtype=np.int64) for a in a_arrs[nonempty]]
-                )
-                flat_b = np.concatenate(
-                    [np.asarray(b, dtype=np.int64) for b in b_arrs[nonempty]]
-                )
-                starts = np.zeros(int(nonempty.sum()), dtype=np.int64)
-                np.cumsum(lens[nonempty][:-1], out=starts[1:])
-                mins = np.empty((len(starts), k), dtype=np.int64)
-                for i in range(k):
-                    mins[:, i] = np.minimum.reduceat((flat_a + i * flat_b) % P, starts)
-                ne_idx = np.flatnonzero(nonempty)
-                for j, row in enumerate(ne_idx):
-                    out[row] = mins[j]
-            # empty shingle array -> array_min(empty) is NULL per element
-            for row in np.flatnonzero(~nonempty):
-                out[row] = [None] * k
-            return pd.Series(out)
-
-        sig = _sig(
-            F.transform(ab, lambda s: s["a"]), F.transform(ab, lambda s: s["b"])
-        )
-    else:
-        # one nested higher-order expression, not k unrolled array_min
-        # branches: the permutation index is a runtime sequence value, so
-        # the expression tree (and its Janino codegen) is O(1) in k instead
-        # of O(k) — at k=64 the unrolled form costs ~2s of one-time
-        # optimizer+compile wall
-        sig = F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda i: F.array_min(
-                F.transform(ab, lambda s: F.pmod(s["a"] + i.cast("long") * s["b"], F.lit(P)))
-            ),
-        )
-    return with_ab.withColumn("sig", sig).drop("_ab")
 
 
 def minhash_signatures(

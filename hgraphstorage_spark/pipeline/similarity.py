@@ -10,18 +10,21 @@
   query's bucket (and optional multi-probe neighbors): at 1000 executors
   the probe touches ~1/2^bits of the data.
 
-All vector math is built-in (`zip_with`/`aggregate`) — JVM-side, no
-Python UDF, no driver-side loops.
+Scoring math is built-in (`zip_with`/`aggregate`), JVM-side. The batch
+kernels (LSH signatures, the centroid argmax, the GEMM pair prefilters)
+are Arrow UDFs over numpy, unpacking list columns only through
+`pipeline.kernels`.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hgraphstorage_spark.pipeline.kernels import list_matrix
 from hgraphstorage_spark.pipeline.state import track
 
 
@@ -35,6 +38,28 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
+
+
+def _pairs_table(va, vb) -> pa.Table:
+    """The (vec_a long, vec_b long) result table of the GEMM pair sites."""
+    return pa.table({"vec_a": pa.array(va, pa.int64()), "vec_b": pa.array(vb, pa.int64())})
+
+
+def _group_pairs(id_col: str, threshold: float):
+    """``applyInArrow`` body shared by the per-bucket and per-cluster
+    prefilters: the (vec_a < vec_b) pairs of one group whose float32
+    unit vectors ``vn`` have dot >= ``threshold``. One small BLAS GEMM
+    per group instead of |group|²/2 per-pair JVM array folds."""
+
+    def pairs(table):
+        A = list_matrix(table["vn"], dtype=np.float32)
+        ids = table[id_col].to_numpy()
+        with np.errstate(invalid="ignore"):
+            ia, ib = np.where(A @ A.T >= np.float32(threshold))
+        keep = ids[ia] < ids[ib]
+        return _pairs_table(ids[ia][keep], ids[ib][keep])
+
+    return pairs
 
 
 def _blocked_pair_candidates(
@@ -53,8 +78,6 @@ def _blocked_pair_candidates(
     exact-order formula.
     Input: (vid, v ARRAY<DOUBLE>, nrm). Output: (vec_a, vec_b).
     """
-    import pandas as pd
-
     spark = prepped.sparkSession
     bp = spark.createDataFrame(
         [(i, j) for i in range(blocks) for j in range(blocks) if i <= j], "bi int, bj int"
@@ -79,38 +102,29 @@ def _blocked_pair_candidates(
 
     eps = 5.1e-7
 
-    def block_pairs(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        empty = pd.DataFrame({"vec_a": pd.array([], dtype="int64"), "vec_b": pd.array([], dtype="int64")})
-        if lpdf.empty or rpdf.empty:
-            return empty
-        A = np.vstack(lpdf["v"].to_numpy())
-        B = np.vstack(rpdf["v"].to_numpy())
+    def block_pairs(key, lt, rt):
+        if not (lt.num_rows and rt.num_rows):
+            return _pairs_table([], [])
+        A, B = list_matrix(lt["v"]), list_matrix(rt["v"])
         with np.errstate(divide="ignore", invalid="ignore"):
             An = A / np.linalg.norm(A, axis=1, keepdims=True)
             Bn = B / np.linalg.norm(B, axis=1, keepdims=True)
         S = An @ Bn.T
-        la = lpdf["vid"].to_numpy()
-        rb = rpdf["vid"].to_numpy()
         ia, ib = np.where(S >= threshold - eps)
-        va, vb = la[ia], rb[ib]
-        bi, bj = int(key[0]), int(key[1])
-        if bi == bj:
+        va, vb = lt["vid"].to_numpy()[ia], rt["vid"].to_numpy()[ib]
+        if key[0].as_py() == key[1].as_py():
             # symmetric matrix: each unordered pair appears twice — keep the
             # (smaller, larger) orientation once
             keep = va < vb
-            return pd.DataFrame({"vec_a": va[keep], "vec_b": vb[keep]})
+            return _pairs_table(va[keep], vb[keep])
         # off-diagonal: each unordered pair appears exactly once, but the
         # smaller vid may be on either side — normalize to (min, max)
-        return pd.DataFrame(
-            {"vec_a": np.minimum(va, vb), "vec_b": np.maximum(va, vb)}
-        )
+        return _pairs_table(np.minimum(va, vb), np.maximum(va, vb))
 
     return (
         left.groupBy("bi", "bj")
         .cogroup(right.groupBy("bi", "bj"))
-        .applyInPandas(block_pairs, schema="vec_a long, vec_b long")
+        .applyInArrow(block_pairs, schema="vec_a long, vec_b long")
     )
 
 
@@ -384,8 +398,6 @@ def embedding_near_dup_lsh(
     can replay bucketing exactly; pass fixed ``bits`` with it (a static
     oracle can't depend on a runtime count). xxhash64 stays the default.
     """
-    import pandas as pd
-
     prepped = embeddings.select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -402,11 +414,8 @@ def embedding_near_dup_lsh(
         # projection (measured ~2.5× on the bench when this was skipped)
         prepped.count()
     if plane_mode == "md5":
-        # _qv in its OWN projection: no CSE inside HOF lambdas, so an
-        # inline qv expression would re-run the whole fixed-point
-        # transform per (table × bit × dim) element_at — O(dims²·bits·
-        # tables) per row (measured 10× on the bench). As a multi-use
-        # non-cheap alias it survives CollapseProject, evaluated once.
+        # _qv in its OWN projection: every table's bucket UDF reads the
+        # one materialized quantized vector
         bucket_src = prepped.withColumn("_qv", quantize_fixed_point(F.col("v")))
         sig = lambda t: quantized_bucket("_qv", dims, bits, seed=t * 1000)  # noqa: E731
     else:
@@ -415,7 +424,7 @@ def embedding_near_dup_lsh(
     # Narrow the shuffled projection (guide §2.3 / §8: shuffle a
     # lightweight proxy, not the payload): the per-bucket GEMM prefilter
     # needs only the NORMALIZED direction of each vector, so the 8-table
-    # explode + applyInPandas shuffle carries a float32 unit vector (4
+    # explode + applyInArrow shuffle carries a float32 unit vector (4
     # bytes/dim) instead of the raw float64 payload (8 bytes/dim) — the
     # exact-verify branches read the full-precision `v`/`nrm` from the
     # persisted prep, which never crosses this shuffle. Zero-norm vectors
@@ -443,29 +452,13 @@ def embedding_near_dup_lsh(
     # output identical to the unfiltered formula.
     eps = 2.0e-4
 
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # per-(table, bucket) BLAS: one small normalized GEMM instead of
-        # |bucket|^2/2 per-pair JVM array folds — the exact op's blocked
-        # candidate-generation trick applied within a bucket. Bucket size
-        # is held ~constant by the adaptive `bits`, so each task is a tiny
-        # fixed-cost matmul and total work stays linear in n.
-        import numpy as np
-
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"vec_a": pd.array([], dtype="int64"), "vec_b": pd.array([], dtype="int64")}
-            )
-        A = np.vstack(pdf["vn"].to_numpy()).astype(np.float32, copy=False)
-        S = A @ A.T
-        ids = pdf["vid"].to_numpy()
-        with np.errstate(invalid="ignore"):
-            ia, ib = np.where(S >= np.float32(threshold - eps))
-        keep = ids[ia] < ids[ib]
-        return pd.DataFrame({"vec_a": ids[ia][keep], "vec_b": ids[ib][keep]})
-
+    # per-(table, bucket) BLAS — the exact op's blocked candidate-generation
+    # trick applied within a bucket. Bucket size is held ~constant by the
+    # adaptive `bits`, so each task is a tiny fixed-cost matmul and total
+    # work stays linear in n.
     candidates = (
         buckets.groupBy("table_id", "bucket")
-        .applyInPandas(bucket_pairs, schema="vec_a long, vec_b long")
+        .applyInArrow(_group_pairs("vid", threshold - eps), schema="vec_a long, vec_b long")
         .distinct()
     )
     va = prepped.select(F.col("vid").alias("vec_a"), F.col("v").alias("v_a"), F.col("nrm").alias("n_a"))
@@ -509,9 +502,10 @@ def quantize_fixed_point(vec: Column) -> Column:
     return F.transform(vec, lambda x: F.floor(x.cast("double") * PLANE_SCALE).cast("long"))
 
 
-def quantized_bucket(qv: str, dims: int, bits: int, seed: int = 0, engine: str = "arrow") -> Column:
+def quantized_bucket(qv: str, dims: int, bits: int, seed: int = 0) -> Column:
     """Integer-exact random-hyperplane bucket for ``plane_mode="md5"``:
-    bit p = sign(Σ_d qv[d]·plane(seed+p, d)) over the fixed-point vector.
+    bit p = sign(Σ_d qv[d]·plane(seed+p, d)) over the fixed-point vector
+    column named ``qv`` (its first ``dims`` components).
 
     All-integer dot products (|term| < 2^41, |sum| < 2^47) are order-free
     and overflow-free — even an engine that sums in doubles gets the exact
@@ -519,68 +513,21 @@ def quantized_bucket(qv: str, dims: int, bits: int, seed: int = 0, engine: str =
     would make a float-dot bucket bit flip near zero between engines;
     this is what makes the LSH op oracle-checkable.
 
-    Plane rows are array LITERALS (folded to constants by Catalyst), so
-    each bit is one `F.aggregate` over the dims with two element_at
-    lookups per term — measured at parity with the xxhash64 signature
-    fold on the bench, and O(bits) py4j calls to build (a fully unrolled
-    bits·dims Add chain costs ~15 s of driver-side Column construction).
-
-    Built as ONE generated-SQL expression (`F.expr`): the equivalent
-    Column-API construction (bits aggregates × 64-literal arrays per
-    table) costs ~2 s of py4j round trips PER CALL on the driver — the
-    SQL string is assembled in Python and parsed JVM-side in one call.
-
-    IMPORTANT: pass the NAME of a materialized ATTRIBUTE (own
-    projection), not an inline expression — no CSE inside HOF lambdas,
-    so an inline quantize expression would be re-evaluated per fold
-    element.
-
-    r13: evaluated as ONE vectorized Arrow UDF over the quantized
-    vector instead of the `aggregate`-HOF-per-bit SQL expression:
-    higher-order functions are CodegenFallback, so the fold ran
-    interpreted — per (row, bit, dim) lambda binding dominated the LSH
-    ops' wall (guide §4.2: hand whole batches to native code). The
-    int64 GEMM against the same md5 plane matrix is EXACT in any
-    summation order (|term| < 2^41, |sum| < 2^47 — no overflow), so
-    the bucket is bit-identical to the fold by integer associativity;
-    pinned by test_lsh_modes::test_quantized_bucket_stable's pure-
-    Python replay. The SQL-fold form remains available via
-    ``engine="sql"`` (the expression the DuckDB oracle mirrors)."""
-    if engine == "sql":
-        parts = []
-        for p in range(bits):
-            arr = ",".join(str(md5_plane_int(seed + p, d)) for d in range(dims))
-            parts.append(
-                f"(CASE WHEN aggregate(sequence(0,{dims - 1}), 0L,"
-                f" (acc, d) -> acc + element_at({qv}, d+1) * element_at(array({arr}), d+1))"
-                f" > 0 THEN {1 << p}L ELSE 0L END)"
-            )
-        return F.expr("(" + " + ".join(parts) + ")")
-    import numpy as np
-
-    # plane matrix (dims x bits) of md5-derived ints — driver-side
-    # constants, shipped inside the UDF closure (a few KB)
+    One vectorized Arrow UDF (guide §4.2: hand whole batches to native
+    code): an exact int64 GEMM of the quantized vectors against the
+    (dims x bits) md5 plane matrix, a driver-side constant shipped in the
+    closure. Pinned by test_lsh_modes::test_quantized_bucket_stable's
+    pure-Python replay. A NULL vector lands in bucket 0."""
     P = np.array(
         [[md5_plane_int(seed + p, d) for p in range(bits)] for d in range(dims)],
         dtype=np.int64,
     )
     weights = np.array([1 << p for p in range(bits)], dtype=np.int64)
 
-    @F.pandas_udf("long")
-    def _bucket(qvs: pd.Series) -> pd.Series:
-        if len(qvs) == 0:
-            return pd.Series([], dtype="int64")
-        mask = qvs.isna().to_numpy()
-        vals = qvs.to_numpy()
-        fill = np.zeros(dims, dtype=np.int64)
-        A = np.vstack(
-            [(fill if m else np.asarray(v, dtype=np.int64)[:dims]) for v, m in zip(vals, mask)]
-        )
-        S = A @ P  # exact int64 dot products
-        out = ((S > 0).astype(np.int64) * weights).sum(axis=1)
-        # a NULL array folds to a NULL sum, whose CASE lands in the
-        # ELSE 0L branch per bit — bucket 0, reproduced by the zero fill
-        return pd.Series(out, dtype="int64")
+    @F.arrow_udf("long")
+    def _bucket(qvs):
+        S = list_matrix(qvs, dims, np.int64) @ P  # exact int64 dot products
+        return pa.array(((S > 0).astype(np.int64) * weights).sum(axis=1))
 
     return _bucket(F.col(qv))
 
@@ -589,113 +536,65 @@ _PLANE_MATRIX_CACHE: dict = {}
 
 
 def _xxhash_plane_matrix(dims: int, bits: int, seed: int):
-    """(dims x bits) float64 matrix of `_plane_component` values for the
-    Arrow signature path — fetched ONCE per (dims, bits, seed) per
-    process by constant-folding the SAME xxhash64 expressions the HOF
-    fold evaluates (a 1-row collect of pure literals; no input data is
-    involved, this is hash-family constant derivation, not result
-    caching). Collecting from the JVM rather than reimplementing
-    xxhash64 in Python guarantees the two paths share one hash family
-    bit-for-bit."""
+    """(dims x bits) float64 matrix of `_plane_component` values, fetched
+    ONCE per (dims, bits, seed) per process by evaluating the plane
+    expression over a one-column ``spark.range(bits·dims)`` (row id =
+    p·dims + d). This is hash-family constant derivation, not result
+    caching: the JVM's own xxhash64 computes it, so there is no second
+    implementation to drift. A one-row select of bits·dims literal
+    columns instead cost seconds of planning per table."""
     key = (dims, bits, seed)
     m = _PLANE_MATRIX_CACHE.get(key)
     if m is None:
-        import numpy as np
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.getActiveSession()
-        cols = [
-            _plane_component(
-                F.lit(seed + p).cast("int"), F.lit(d).cast("int")
-            ).alias(f"c_{p}_{d}")
-            for p in range(bits)
-            for d in range(dims)
-        ]
-        row = spark.range(1).select(*cols).collect()[0]
-        m = np.array(
-            [[row[f"c_{p}_{d}"] for p in range(bits)] for d in range(dims)],
-            dtype=np.float64,
+        plane = F.expr(f"CAST({seed} + id DIV {dims} AS INT)")
+        dim = F.expr(f"CAST(id % {dims} AS INT)")
+        rows = (
+            SparkSession.getActiveSession()
+            .range(bits * dims)
+            .select("id", _plane_component(plane, dim).alias("c"))
+            .collect()
         )
+        ids = np.array([r.id for r in rows], dtype=np.int64)
+        m = np.empty((dims, bits), dtype=np.float64)
+        m[ids % dims, ids // dims] = [r.c for r in rows]
         _PLANE_MATRIX_CACHE[key] = m
     return m
 
 
 def _plane_component(plane: Column, dim: Column) -> Column:
     """Deterministic pseudo-random hyperplane component in [-1, 1):
-    xxhash64(plane, dim) scaled. Same value on any executor — the plane
-    matrix never materializes. `plane`/`dim` are int columns (hash values
-    are type-sensitive; keep them IntegerType)."""
+    xxhash64(plane, dim) scaled. `plane`/`dim` are int columns (hash
+    values are type-sensitive; keep them IntegerType)."""
     h = F.xxhash64(plane, dim)
     return (h % 1_000_003).cast("double") / 1_000_003.0
 
 
-def signature_bits(vec: "Column | str", dims: int, bits: int, seed: int = 0) -> Column:
-    """Random-hyperplane signature: bit i = sign(dot(vec, plane_i)).
+def signature_bits(vec: str, dims: int, bits: int, seed: int = 0) -> Column:
+    """Random-hyperplane signature of the vector column named ``vec``
+    (its first ``dims`` components): bit i = sign(dot(vec, plane_i)).
     Different `seed`s give independent plane sets (hash tables).
 
-    Pass the NAME of the vector column (string) for the fast path: one
-    vectorized Arrow UDF (guide §4.2) that accumulates the per-bit dot
-    products as ``dims`` rank-1 numpy updates — ``acc += V[:, d] ⊗
-    P[d, :]`` for d ascending — so every (row, plane) dot performs the
-    IDENTICAL sequence of IEEE multiply-then-add operations as the
-    nested-HOF fold below (same ascending-dim left fold from 0.0, both
-    strict float64), and the signature is bit-identical (pinned by
-    test_lsh_modes::test_signature_unrolled_equals_fold). The plane
-    matrix is fetched ONCE per (dims, bits, seed) per process from the
-    JVM itself (a 1-row constant-fold collect of the same
-    xxhash64 % 1000003 / 1000003.0 expressions the fold evaluates), so
-    the hash family cannot drift between the two paths.
-
-    Why not the fold for the hot paths: higher-order functions are
-    CodegenFallback, so the nested fold runs interpreted — per (row,
-    bit, dim) lambda binding plus a fresh xxhash64 per element. The
-    Column-argument form keeps the fold for callers that only hold a
-    derived Column (and as the reference implementation).
+    One vectorized Arrow UDF (guide §4.2). The per-bit dot products
+    accumulate as ``dims`` rank-1 numpy updates — ``acc += V[:, d] ⊗
+    P[d, :]`` for d ascending — so every (row, plane) dot is the strict
+    float64 left fold from 0.0 in ascending-dim order, reproducible by a
+    plain-Python replay (test_lsh_modes). The plane matrix comes from
+    `_xxhash_plane_matrix`. A NULL vector signs to 0.
     """
-    if isinstance(vec, str):
-        import numpy as np
+    P = _xxhash_plane_matrix(dims, bits, seed)
+    weights = np.array([1 << p for p in range(bits)], dtype=np.int64)
 
-        P = _xxhash_plane_matrix(dims, bits, seed)  # (dims x bits) float64
-        weights = np.array([1 << p for p in range(bits)], dtype=np.int64)
+    @F.arrow_udf("long")
+    def _sig(vs):
+        A = list_matrix(vs, dims)
+        acc = np.zeros((A.shape[0], bits), dtype=np.float64)
+        for d in range(dims):
+            acc += np.multiply.outer(A[:, d], P[d])
+        return pa.array(((acc > 0).astype(np.int64) * weights).sum(axis=1))
 
-        @F.pandas_udf("long")
-        def _sig(vs: pd.Series) -> pd.Series:
-            if len(vs) == 0:
-                return pd.Series([], dtype="int64")
-            mask = vs.isna().to_numpy()
-            fill = np.zeros(dims, dtype=np.float64)
-            A = np.vstack(
-                [
-                    (fill if m else np.asarray(v, dtype=np.float64)[:dims])
-                    for v, m in zip(vs.to_numpy(), mask)
-                ]
-            )
-            # ascending-dim rank-1 accumulation: per (row, plane) this is
-            # exactly acc = acc + (x_d * p_d) in float64, d = 0..dims-1 —
-            # the fold's operation sequence, vectorized across rows/planes
-            acc = np.zeros((A.shape[0], bits), dtype=np.float64)
-            for d in range(dims):
-                acc += np.multiply.outer(A[:, d], P[d])
-            out = ((acc > 0).astype(np.int64) * weights).sum(axis=1)
-            # NULL array: the fold's NULL sums skip every bitwiseOR — 0
-            return pd.Series(out, dtype="int64")
-
-        return _sig(F.col(vec))
-    one = F.lit(1).cast("long")
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, p: F.when(
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(dims - 1)),
-                F.lit(0.0),
-                lambda dacc, d: dacc
-                + F.element_at(vec, d + 1).cast("double") * _plane_component(p + F.lit(seed), d),
-            )
-            > 0,
-            acc.bitwiseOR(F.call_function("shiftleft", one, p)),
-        ).otherwise(acc),
-    )
+    return _sig(F.col(vec))
 
 
 def ivf_topk(
@@ -798,8 +697,7 @@ def lsh_bucket_topk(
             embeddings.select(
                 F.col(id_col).alias("vec_id"),
                 F.col(vec_col).alias("_vec"),
-                # own projection: no CSE inside HOF lambdas (see
-                # quantized_bucket docstring)
+                # own projection: quantized_bucket takes a column name
                 quantize_fixed_point(F.col(vec_col)).alias("_qv"),
             )
             .select("vec_id", "_vec", quantized_bucket("_qv", dims, bits).alias("bucket"))
@@ -844,88 +742,54 @@ def label_centroids(
 
 
 def _assign_to_centroids(
-    frame: DataFrame, cent_rows: DataFrame, id_col: str, vec_col: str, out_col: str,
-    engine: str = "arrow",
+    frame: DataFrame, cent_rows: DataFrame, id_col: str, vec_col: str, out_col: str
 ) -> DataFrame:
     """Broadcast-centroid cosine argmax, ties to the smaller centroid id
     — the ONE assignment rule shared by ``kmeans_iterations`` (training)
     and ``topic_assign`` (the persisted-model apply path), so the
-    tie-break can never silently diverge between them (review catch).
+    tie-break can never silently diverge between them.
     ``cent_rows``: (cid, cvec). Returns (vec_id, <out_col>).
 
-    r13 default is one vectorized Arrow projection (guide §4.2) instead
-    of explode×k + cosine-HOF + a vec_id-keyed shuffle: the k centroid
-    vectors (bounded — nlist/n_topics rows) are collected once at build
-    and the per-row cosines accumulate as ascending-dim rank-1 numpy
-    updates, replaying the `cosine` fold's exact IEEE multiply-add
-    sequence per (row, centroid); the argmax replays `max_by(cid,
-    struct(csim, -cid))` — centroids scanned cid-ascending and
-    `np.argmax` keeps the FIRST maximum, with NaN greatest exactly like
-    Spark's double ordering. Bit-identical assignments wherever the
-    reference is defined (pinned by
-    test_pipeline.py::test_assign_to_centroids_arrow_equals_sql); the
-    one divergence is zero-norm vectors, where the SQL fold raises
-    DIVIDE_BY_ZERO under ANSI (Spark 4 default) while the Arrow path
-    keeps NaN-cosine semantics (NaN greatest, ties to smallest cid).
-    The explode+max_by form stays under ``engine="sql"`` as the
-    reference.
-    Removes one Exchange (the groupBy(vec_id) of n·k rows) from every
-    Lloyd round and every topic routing."""
-    if engine == "arrow":
-        import numpy as np
-
-        rows = sorted(cent_rows.select("cid", "cvec").collect(), key=lambda r: r.cid)
-        if rows:
-            cids = np.array([r.cid for r in rows], dtype=np.int64)
-            C = np.array([[float(x) for x in r.cvec] for r in rows], dtype=np.float64)
-            dims = C.shape[1]
-            cn_sq = np.zeros(len(rows), dtype=np.float64)
-            for d in range(dims):
-                cn_sq += C[:, d] * C[:, d]
-            cn = np.sqrt(cn_sq)
-
-            @F.pandas_udf("long")
-            def _assign(vs: pd.Series) -> pd.Series:
-                if len(vs) == 0:
-                    return pd.Series([], dtype="int64")
-                A = np.vstack([np.asarray(v, dtype=np.float64) for v in vs.to_numpy()])
-                if A.shape[1] != dims:
-                    raise ValueError(
-                        f"vector dims {A.shape[1]} != centroid dims {dims}"
-                    )
-                acc = np.zeros((A.shape[0], len(cids)), dtype=np.float64)
-                rn_sq = np.zeros(A.shape[0], dtype=np.float64)
-                for d in range(dims):
-                    xd = A[:, d]
-                    acc += np.multiply.outer(xd, C[:, d])
-                    rn_sq += xd * xd
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    csim = acc / (np.sqrt(rn_sq)[:, None] * cn[None, :])
-                return pd.Series(cids[np.argmax(csim, axis=1)], dtype="int64")
-
-            return frame.select(
-                F.col(id_col).alias("vec_id"), _assign(F.col(vec_col)).alias(out_col)
-            )
-        # no centroids: the explode form yields no rows — reproduce that
+    One vectorized Arrow projection (guide §4.2), no shuffle: the k
+    centroid vectors (bounded — nlist/n_topics rows) are collected once
+    at build, and the per-row cosines accumulate as ascending-dim rank-1
+    numpy updates — the strict float64 left fold of `cosine` per (row,
+    centroid). The argmax scans centroids cid-ascending and `np.argmax`
+    keeps the FIRST maximum, with NaN greatest (Spark's double ordering):
+    ties go to the smallest cid, and a zero-norm or NULL vector (NaN
+    cosine to every centroid) goes to the smallest cid. Vectors whose
+    length differs from the centroids' raise ValueError."""
+    rows = sorted(cent_rows.select("cid", "cvec").collect(), key=lambda r: r.cid)
+    if not rows:
         return frame.select(F.col(id_col).alias("vec_id")).limit(0).withColumn(
             out_col, F.lit(None).cast("long")
         )
-    cents = cent_rows.groupBy().agg(F.collect_list(F.struct("cid", "cvec")).alias("cents"))
-    return (
-        frame.crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("_vec"),
-            F.explode("cents").alias("c"),
-        )
-        .select(
-            "vec_id",
-            F.col("c.cid").alias("cid"),
-            cosine(F.col("_vec"), F.col("c.cvec")).alias("csim"),
-        )
-        .groupBy("vec_id")
-        .agg(F.max_by("cid", F.struct(F.col("csim"), -F.col("cid"))).alias(out_col))
-    )
+    cids = np.array([r.cid for r in rows], dtype=np.int64)
+    C = np.array([[float(x) for x in r.cvec] for r in rows], dtype=np.float64)
+    dims = C.shape[1]
+    cn_sq = np.zeros(len(rows), dtype=np.float64)
+    for d in range(dims):
+        cn_sq += C[:, d] * C[:, d]
+    cn = np.sqrt(cn_sq)
+
+    @F.arrow_udf("long")
+    def _assign(vs):
+        A = list_matrix(vs)
+        if len(A) == vs.null_count:  # empty or all-NULL batch
+            A = np.zeros((len(A), dims))
+        if A.shape[1] != dims:
+            raise ValueError(f"vector dims {A.shape[1]} != centroid dims {dims}")
+        acc = np.zeros((A.shape[0], len(cids)), dtype=np.float64)
+        rn_sq = np.zeros(A.shape[0], dtype=np.float64)
+        for d in range(dims):
+            xd = A[:, d]
+            acc += np.multiply.outer(xd, C[:, d])
+            rn_sq += xd * xd
+        with np.errstate(invalid="ignore", divide="ignore"):
+            csim = acc / (np.sqrt(rn_sq)[:, None] * cn[None, :])
+        return pa.array(cids[np.argmax(csim, axis=1)])
+
+    return frame.select(F.col(id_col).alias("vec_id"), _assign(F.col(vec_col)).alias(out_col))
 
 
 def _centroid_update(assigned: DataFrame, vecs: DataFrame, label_col: str) -> DataFrame:
@@ -954,7 +818,6 @@ def kmeans_iterations(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_engine: str = "arrow",
 ) -> DataFrame:
     """Lloyd k-means over cosine similarity: deterministic init (the
     ``nlist`` smallest-id vectors), then ``iterations`` rounds of
@@ -962,9 +825,9 @@ def kmeans_iterations(
     offline training step behind ``ivf_topk``'s inverted lists.
     Returns the final assignment (vec_id, list_id).
 
-    Scale shape per round: one pass over the data against BROADCAST
-    centroids (explode-the-small-side + max_by argmax, no shuffle of the
-    vectors — ``_assign_to_centroids``), then a centroid update keyed by
+    Scale shape per round: one pass over the data against the collected
+    centroids (one Arrow cosine argmax, no shuffle of the vectors —
+    ``_assign_to_centroids``), then a centroid update keyed by
     (list, dim) (``_centroid_update``). A cluster that loses all members
     disappears (standard Lloyd degeneracy; a production run would
     re-seed it).
@@ -974,15 +837,11 @@ def kmeans_iterations(
         .limit(nlist)
         .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
     )
-    assigned = _assign_to_centroids(
-        embeddings, cents, id_col, vec_col, "list_id", engine=assign_engine
-    )
+    assigned = _assign_to_centroids(embeddings, cents, id_col, vec_col, "list_id")
     vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
     for _ in range(iterations - 1):
         new_cents = _centroid_update(assigned, vecs, "list_id").localCheckpoint()
-        assigned = _assign_to_centroids(
-            embeddings, new_cents, id_col, vec_col, "list_id", engine=assign_engine
-        )
+        assigned = _assign_to_centroids(embeddings, new_cents, id_col, vec_col, "list_id")
     return assigned
 
 
@@ -1011,8 +870,6 @@ def semantic_dedup(
     applies: near-duplicates split across clusters are missed — that is
     the documented approximation, bounded by cluster quality.
     """
-    import pandas as pd
-
     from .state import track
 
     # both intermediates fan out to multiple plan branches — without a
@@ -1035,7 +892,7 @@ def semantic_dedup(
     )
     # Narrow the per-cluster shuffle (guide §2.3/§8, same fix as
     # embedding_near_dup_lsh): the GEMM prefilter needs only the
-    # normalized DIRECTION, so the applyInPandas shuffle carries a
+    # normalized DIRECTION, so the applyInArrow shuffle carries a
     # float32 unit vector (4 B/dim) instead of the raw float64 payload
     # plus an entirely-unused `nrm` column; the exact float64 verify
     # below reads `v`/`nrm` from the persisted prep, which never crosses
@@ -1050,24 +907,8 @@ def semantic_dedup(
     # re-score keeps the output identical (same rationale as
     # embedding_near_dup_lsh)
     eps = 2.0e-4
-
-    def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"vec_a": pd.array([], dtype="int64"), "vec_b": pd.array([], dtype="int64")}
-            )
-        A = np.vstack(pdf["vn"].to_numpy()).astype(np.float32, copy=False)
-        S = A @ A.T
-        ids = pdf["vec_id"].to_numpy()
-        with np.errstate(invalid="ignore"):
-            ia, ib = np.where(S >= np.float32(threshold - eps))
-        keep = ids[ia] < ids[ib]
-        return pd.DataFrame({"vec_a": ids[ia][keep], "vec_b": ids[ib][keep]})
-
-    candidates = clustered.groupBy("list_id").applyInPandas(
-        cluster_pairs, schema="vec_a long, vec_b long"
+    candidates = clustered.groupBy("list_id").applyInArrow(
+        _group_pairs("vec_id", threshold - eps), schema="vec_a long, vec_b long"
     )
     va = prepped.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("v_a"), F.col("nrm").alias("n_a"))
     vb = prepped.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("v_b"), F.col("nrm").alias("n_b"))
@@ -1758,7 +1599,7 @@ def pca_fit(emb: DataFrame, k: int = 8, vec_col: str = "embedding"):
 
     The only distributed work is one pass of per-partition moment
     partials — count, sum vector, and d x d Gram matrix — via
-    mapInPandas (numpy outer-product per Arrow batch, BLAS-backed).
+    mapInArrow (numpy Gram matrix per Arrow batch, BLAS-backed).
     Partials are tiny (d + d^2 doubles per partition: ~33 KB at d=64),
     so the driver-side reduce handles thousands of partitions for
     kilobytes each — the standard treeAggregate shape, not a data
@@ -1770,25 +1611,18 @@ def pca_fit(emb: DataFrame, k: int = 8, vec_col: str = "embedding"):
     eigenvector sign is fixed by making each component's
     largest-magnitude entry positive.
     """
-    import numpy as np
-    import pandas as pd
-
     vec = emb.select(F.col(vec_col).alias("v"))
 
     def partials(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            A = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "n": [A.shape[0]],
-                    "s": [A.sum(axis=0).tolist()],
-                    "g": [(A.T @ A).ravel().tolist()],
-                }
+            A = list_matrix(batch.column("v"))
+            yield pa.RecordBatch.from_pydict(
+                {"n": [A.shape[0]], "s": [A.sum(axis=0)], "g": [(A.T @ A).ravel()]}
             )
 
-    rows = vec.mapInPandas(partials, schema="n long, s array<double>, g array<double>").collect()
+    rows = vec.mapInArrow(partials, schema="n long, s array<double>, g array<double>").collect()
     n = sum(r["n"] for r in rows)
     if n == 0:
         raise ValueError("pca_fit: empty input")
@@ -1986,8 +1820,7 @@ def topic_clusters(
         )
     )
     assigned = kmeans_iterations(
-        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v",
-        assign_engine="sql",
+        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v"
     )
     return assigned.select(F.col("vec_id").alias(id_col), F.col("list_id").alias("topic"))
 
@@ -2052,17 +1885,16 @@ def topic_model(
     from hgraphstorage_spark.pipeline.state import track
     from hgraphstorage_spark.pipeline.text import _tf_frame, tfidf_apply, tfidf_idf_table
 
-    # ONE tokenize+fold pass: the persisted tf frame feeds both the idf
-    # table and the vectorization (review catch — the naive composition
-    # ran the O(d·tokens) fold twice over the training corpus)
+    # ONE tokenize+count pass: the persisted tf frame feeds both the idf
+    # table and the vectorization (the naive composition tokenized and
+    # counted the training corpus twice)
     tf = _tf_frame(docs, d, text_col, id_col, hash_mode)
     idf = track(tfidf_idf_table(docs, d, text_col, id_col, hash_mode, tf_frame=tf))
     vecs = track(
         tfidf_apply(docs, idf, d, scale, text_col, id_col, hash_mode, tf_frame=tf)
     )
     assigned = kmeans_iterations(
-        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v",
-        assign_engine="sql",
+        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v"
     )
     cents = _centroid_update(
         assigned, vecs.select(F.col("doc_id").alias("vec_id"), F.col("v").alias("_v")), "list_id"
@@ -2086,15 +1918,18 @@ def topic_assign(
     streaming micro-batch scores identically to a batch run (tested).
     Returns (doc_id, topic) for every doc with at least one token.
 
+    A doc whose every token hashes to a bucket unseen in training has a
+    zero vector: its cosine to every centroid is NaN, NaN sorts
+    greatest, and ties go to the smallest topic id — so it routes to the
+    smallest topic id (``_assign_to_centroids``' rule).
+
     Scale shape: one narrow vectorize pass against the broadcast idf
-    array, one broadcast-centroid explode + argmax — nothing data-sized
-    shuffles."""
+    array, one Arrow cosine argmax against the collected centroids —
+    nothing data-sized shuffles."""
     from hgraphstorage_spark.pipeline.text import tfidf_apply
 
     vecs = tfidf_apply(docs, idf_table, d, scale, text_col, id_col, hash_mode)
     cent_rows = centroids.select(F.col("topic").alias("cid"), "cvec")
-    return _assign_to_centroids(
-        vecs, cent_rows, "doc_id", "v", "topic", engine="sql"
-    ).select(
+    return _assign_to_centroids(vecs, cent_rows, "doc_id", "v", "topic").select(
         F.col("vec_id").alias(id_col), "topic"
     )

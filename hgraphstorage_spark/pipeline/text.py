@@ -1,13 +1,13 @@
 """Text-analysis operators over a documents table.
 
-All operators are built-in-function compositions (JVM-side, whole-stage
-codegen) — no Python UDFs in the hot path. Deterministic by construction
-so a SQL oracle can reproduce them bit-for-bit.
+Operators are built-in-function compositions (JVM-side, whole-stage
+codegen); the TF bucket count is one Arrow UDF over `pipeline.kernels`.
+Deterministic by construction so a SQL oracle can reproduce them
+bit-for-bit.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type hints resolve in module globals
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1966,27 +1966,21 @@ def vocab_drift(
 
 def _tf_frame(
     docs: DataFrame, d: int, text_col: str, id_col: str, hash_mode: str,
-    persist: bool = True, engine: str = "sql",
+    persist: bool = True,
 ) -> DataFrame:
     """(doc_id, _tf ARRAY<DOUBLE>[d]) — the shared per-doc bucket-count
-    fold behind the TF-IDF family. Zero shuffle: tokens hash to buckets
-    in their own projection (no-CSE-in-HOF rule), then fold into the
-    d-vector. Zero-token docs are excluded. ``persist`` (default) cuts
-    lineage for multi-branch consumers — without it the O(d·tokens)
-    tokenize+fold re-runs per branch; single-consumer callers
+    vector behind the TF-IDF family. Zero shuffle: tokens hash to buckets
+    JVM-side (xxhash64/md5 in codegen), then one vectorized bincount per
+    Arrow batch counts them into the d-vector — counts are exact small
+    integers in float64. Zero-token docs are excluded. ``persist``
+    (default) cuts lineage for multi-branch consumers — without it the
+    tokenize+count re-runs per branch; single-consumer callers
     (tfidf_apply, incl. streaming micro-batches where a cached frame
-    would leak across batches) pass False.
+    would leak across batches) pass False."""
+    import numpy as np
 
-    ``engine="arrow"`` (default) replaces the aggregate-fold with one
-    vectorized bincount per Arrow batch. Higher-order functions are
-    CodegenFallback — the fold ran interpreted, rebuilding a d-element
-    array per token (O(d·tokens) lambda dispatches per doc). The bucket
-    hashes stay JVM-side (xxhash64/md5 in codegen); only the int array
-    crosses the boundary, and counts are exact small integers, so the
-    float64 result is bit-identical to the fold (pinned by
-    test_tf_frame_arrow_equals_fold). ``engine="sql"`` keeps the fold —
-    the reference form the DuckDB oracle mirrors."""
     from hgraphstorage_spark.pipeline.dedup import _parallel, md5_long
+    from hgraphstorage_spark.pipeline.kernels import matrix_list, ragged
     from hgraphstorage_spark.pipeline.state import track
 
     if hash_mode == "md5":
@@ -2000,40 +1994,15 @@ def _tf_frame(
         F.col(id_col).alias("doc_id"),
         F.transform(toks, lambda t: bucket(t).cast("int")).alias("_bs"),
     )
-    if engine == "arrow":
-        import numpy as np
 
-        @F.pandas_udf("array<double>")
-        def _counts(bs: pd.Series) -> pd.Series:
-            arrs = bs.to_numpy()
-            n = len(arrs)
-            if n == 0:
-                return pd.Series([], dtype=object)
-            lens = np.fromiter(
-                (0 if a is None else len(a) for a in arrs), dtype=np.int64, count=n
-            )
-            if int(lens.sum()):
-                flat = np.concatenate(
-                    [np.asarray(a, dtype=np.int64) for a in arrs if a is not None and len(a)]
-                )
-                rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-                out = (
-                    np.bincount(rows * d + flat, minlength=n * d)
-                    .astype(np.float64)
-                    .reshape(n, d)
-                )
-            else:
-                out = np.zeros((n, d), dtype=np.float64)
-            return pd.Series(list(out))
+    @F.arrow_udf("array<double>")
+    def _counts(bs):
+        flat, lens = ragged(bs)
+        rows = np.repeat(np.arange(len(lens)), lens)
+        counts = np.bincount(rows * d + flat, minlength=len(lens) * d)
+        return matrix_list(counts.astype(np.float64).reshape(len(lens), d))
 
-        tf = _counts(F.col("_bs"))
-    else:
-        tf = F.aggregate(
-            F.col("_bs"),
-            F.array_repeat(F.lit(0.0), d),
-            lambda acc, b: F.transform(acc, lambda x, i: x + F.when(i == b, 1.0).otherwise(0.0)),
-        )
-    out = bucketed.filter(F.size("_bs") > 0).select("doc_id", tf.alias("_tf"))
+    out = bucketed.filter(F.size("_bs") > 0).select("doc_id", _counts(F.col("_bs")).alias("_tf"))
     return track(out) if persist else out
 
 
@@ -2051,7 +2020,7 @@ def tfidf_idf_table(
     :func:`tfidf_apply` vectorizes ANY frame — including streaming
     micro-batches — against it without touching the training corpus
     again (the dsir_ratio_table pattern). ``tf_frame`` lets a caller that
-    already built the (persisted) tf fold share it (topic_model builds
+    already built the (persisted) tf frame share it (topic_model builds
     it once for both the idf table and the vectors)."""
     withtf = tf_frame if tf_frame is not None else _tf_frame(docs, d, text_col, id_col, hash_mode)
     dfc = (
@@ -2085,13 +2054,13 @@ def tfidf_apply(
     tf_frame: DataFrame | None = None,
 ) -> DataFrame:
     """Vectorize a frame against a FIXED idf table (the apply half of
-    the TF-IDF split): same fold, same integer quantization as
+    the TF-IDF split): same TF count, same integer quantization as
     :func:`tfidf_vectors`, but the corpus statistics come from the
     d-row ``idf_table`` (broadcast as one array) — so new documents and
     streaming micro-batches vectorize identically to the training run.
     ``tfidf_apply(docs, tfidf_idf_table(docs))`` equals
     ``tfidf_vectors(docs)`` exactly (tested). ``tf_frame``: share a
-    prebuilt fold (see tfidf_idf_table)."""
+    prebuilt tf frame (see tfidf_idf_table)."""
     withtf = (
         tf_frame
         if tf_frame is not None
@@ -2136,10 +2105,8 @@ def tfidf_vectors(
     family so a DuckDB oracle replays the vectors exactly; xxhash64 is
     the fast path. Returns (doc_id, v ARRAY<DOUBLE>[d]).
 
-    Scale shape: one narrow tokenize+bucket+fold projection (the
-    O(d·tokens) fold stays inside whole-stage codegen; bucket hashes are
-    materialized in their OWN projection level first — Catalyst does no
-    CSE inside HOF lambdas), one d-row aggregate, one broadcast join.
+    Scale shape: one narrow tokenize+bucket projection and one Arrow
+    bincount (``_tf_frame``), one d-row aggregate, one broadcast join.
     The token stream never shuffles."""
     withtf = _tf_frame(docs, d, text_col, id_col, hash_mode)
     # idf: bucket document frequencies + N in one tiny pass over the

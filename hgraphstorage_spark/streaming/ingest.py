@@ -562,9 +562,9 @@ def stream_embed_dedup(
     agree on the signature SET always).
 
     The signature is ``pipeline.similarity.signature_bits`` — the SAME
-    narrow zero-shuffle expression the batch LSH ops bucket on, with
+    narrow zero-shuffle Arrow kernel the batch LSH ops bucket on, with
     planes derived from xxhash64(plane, dim) so no plane matrix is ever
-    stored or shipped. Two vectors at angle θ share the full signature
+    stored. Two vectors at angle θ share the full signature
     with probability (1 − θ/π)^bits: near-identical embeddings (re-runs
     of the same content through the same encoder, θ ≈ 0) collapse with
     high probability, genuinely different ones survive. This is

@@ -237,7 +237,7 @@ class TestNewOperatorPlans:
         assert "InMemoryTableScan" in plan
 
     def test_cluster_pair_shuffles_carry_float32_proxy_not_payload(self, spark):
-        """r13 narrow-shuffle fix (guide §2.3): the applyInPandas GEMM
+        """r13 narrow-shuffle fix (guide §2.3): the applyInArrow GEMM
         prefilter stages of semantic_dedup and embedding_near_dup_lsh
         must ship the normalized float32 proxy (`vn`), never the raw
         float64 payload `v` (+ nrm) — the exact verify reads full
@@ -256,7 +256,7 @@ class TestNewOperatorPlans:
             embedding_near_dup_lsh(emb, threshold=0.35, bits=4, tables=2),
         ):
             plan = executed_plan(df)
-            lines = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandas" in ln]
+            lines = [ln for ln in plan.splitlines() if "FlatMapGroupsInArrow" in ln]
             assert lines, plan[:500]
             for ln in lines:
                 assert "vn#" in ln, ln

@@ -202,7 +202,7 @@ class TestNewOpPlans:
         plan = executed_plan(embedding_near_dup_lsh(emb))
         # candidates come from per-bucket Arrow GEMM, not an O(bucket^2)
         # JVM self-join; no cartesian anywhere
-        assert "FlatMapGroupsInPandas" in plan
+        assert "FlatMapGroupsInArrow" in plan
         assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
     def test_semantic_dedup_plan(self, spark):
@@ -211,7 +211,7 @@ class TestNewOpPlans:
 
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         plan = executed_plan(semantic_dedup(emb))
-        assert "FlatMapGroupsInPandas" in plan  # per-cluster GEMM
+        assert "FlatMapGroupsInArrow" in plan  # per-cluster GEMM
         # the only nested-loop joins allowed are kmeans' deliberate 1-row
         # broadcast of the collected centroid list (BuildRight, Cross)
         assert "CartesianProduct" not in plan

@@ -3980,6 +3980,23 @@ class TestTopicModelSplit:
         )
         assert got == want and len(got) == 500
 
+    def test_zero_vector_routes_to_smallest_topic(self, spark):
+        """A doc whose every token hashes to a bucket unseen in training
+        has a zero TF-IDF vector. Its cosine to every centroid is NaN,
+        which sorts greatest, so it routes to the smallest topic id
+        instead of failing the query with DIVIDE_BY_ZERO."""
+        from hgraphstorage_spark.pipeline.similarity import topic_assign, topic_model
+        from hgraphstorage_spark.pipeline.text import tfidf_apply
+
+        train = spark.createDataFrame(
+            [(1, "apple apple"), (2, "banana"), (3, "apple banana")], "doc_id long, text string"
+        )
+        idf, cents = topic_model(train, d=64)
+        new = spark.createDataFrame([(9, "zebra")], "doc_id long, text string")
+        assert [set(r.v) for r in tfidf_apply(new, idf, d=64).collect()] == [{0}]
+        got = [(r.doc_id, r.topic) for r in topic_assign(new, idf, cents, d=64).collect()]
+        assert got == [(9, min(r.topic for r in cents.collect()))]
+
 
 def test_search_eval_reports_unretrieved_judged_query(spark):
     """A query with relevance judgments but ZERO ranking rows must appear
@@ -4350,29 +4367,66 @@ class TestFIMTransform:
         assert half <= full
 
 
+def _ref_cosine_argmax(v, cents):
+    """Plain-Python reference of the centroid assignment: the cosine as
+    an ascending-dim float64 left fold, NaN greatest, ties to the first
+    (smallest) cid. ``cents``: [(cid, cvec)] in cid order."""
+    import math
+
+    def fold(xs, ys):
+        acc = 0.0
+        for x, y in zip(xs, ys):
+            acc = acc + x * y
+        return acc
+
+    best, best_key = None, None
+    for cid, c in cents:
+        den = math.sqrt(fold(v, v)) * math.sqrt(fold(c, c))
+        cs = fold(v, c) / den if den else math.nan
+        key = (1, 0.0) if math.isnan(cs) else (0, cs)
+        if best_key is None or key > best_key:
+            best, best_key = cid, key
+    return best
+
+
 class TestAssignToCentroidsArrow:
-    def test_assign_to_centroids_arrow_equals_sql(self, spark):
-        """The r13 Arrow assignment path must reproduce the explode+max_by
-        form row-for-row: same IEEE cosine bits (ascending-dim fold order),
+    def test_assign_to_centroids_arrow_equals_reference(self, spark):
+        """The Arrow assignment reproduces a plain-Python cosine argmax
+        row-for-row: same IEEE cosine bits (ascending-dim fold order),
         NaN-greatest ordering (zero vectors), first-max = smallest-cid ties."""
         from hgraphstorage_spark.pipeline.similarity import _assign_to_centroids
+
+        def check(vf, cf, vec_col, cvec_col):
+            cents = sorted((r[0], [float(x) for x in r[1]]) for r in cf.collect())
+            zero = [0.0] * len(cents[0][1])  # a NULL vector counts as zero
+            want = {
+                r[0]: _ref_cosine_argmax([float(x) for x in r[1]] if r[1] else zero, cents)
+                for r in vf.select("vec_id", vec_col).collect()
+            }
+            got = _assign_to_centroids(
+                vf, cf.select("cid", F.col(cvec_col).alias("cvec")), "vec_id", vec_col, "list_id"
+            )
+            assert {r.vec_id: r.list_id for r in got.collect()} == want
+            return want
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         cents = (
             emb.orderBy(F.col("vec_id").asc()).limit(6)
             .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
         )
-        a = _assign_to_centroids(emb, cents, "vec_id", "embedding", "list_id")
-        s = _assign_to_centroids(emb, cents, "vec_id", "embedding", "list_id", engine="sql")
-        assert bag(a) == bag(s)
+        assert len(check(emb, cents, "embedding", "cvec")) > 0
 
-        # adversarial ties: exact duplicates of a centroid (csim tie across
-        # duplicate centroids must break to the smaller cid in both paths)
+        # adversarial: exact duplicates of a centroid (csim tie across
+        # duplicate centroids breaks to the smaller cid), zero-norm and NULL
+        # vectors (NaN cosine to every centroid: NaN sorts greatest, ties to
+        # the smallest cid) and d=1
         rows = [
             (1, [1.0, 0.0, 0.0, 0.0]),
             (2, [0.0, 1.0, 0.0, 0.0]),
+            (3, [0.0, 0.0, 0.0, 0.0]),
             (4, [1.0, 0.0, 0.0, 0.0]),   # exactly on centroids 10 and 11
             (5, [0.5, 0.5, 0.0, 0.0]),
+            (6, None),
         ]
         cent = [
             (10, [1.0, 0.0, 0.0, 0.0]),
@@ -4381,67 +4435,92 @@ class TestAssignToCentroidsArrow:
         ]
         vf = spark.createDataFrame(rows, "vec_id long, v array<double>")
         cf = spark.createDataFrame(cent, "cid long, cvec array<double>")
-        a2 = _assign_to_centroids(vf, cf, "vec_id", "v", "list_id")
-        s2 = _assign_to_centroids(vf, cf, "vec_id", "v", "list_id", engine="sql")
-        assert bag(a2) == bag(s2)
-        assert {r.vec_id: r.list_id for r in a2.collect()}[4] == 10
+        want = check(vf, cf, "v", "cvec")
+        assert want[3] == want[4] == want[6] == 10
+        v1 = spark.createDataFrame([(1, [2.0]), (2, [-3.0]), (3, [0.0])], "vec_id long, v array<double>")
+        c1 = spark.createDataFrame([(7, [-1.0]), (8, [5.0]), (9, [4.0])], "cid long, cvec array<double>")
+        assert check(v1, c1, "v", "cvec") == {1: 8, 2: 7, 3: 7}
 
-        # zero-norm vectors: the SQL fold raises DIVIDE_BY_ZERO under ANSI
-        # (Spark 4 default), so the reference is undefined there; the Arrow
-        # path keeps numpy's NaN cosines, where NaN sorts greatest and ties
-        # break to the smallest cid — pin that documented behavior
-        zf = spark.createDataFrame(
-            [(3, [0.0, 0.0, 0.0, 0.0])], "vec_id long, v array<double>"
-        )
-        az = _assign_to_centroids(zf, cf, "vec_id", "v", "list_id")
-        assert [r.list_id for r in az.collect()] == [10]
+
+def _ref_minhash(a, b, k):
+    """Plain-Python k-permutation min over the per-shingle (a, b) base
+    hashes; an empty or NULL array gives k NULLs."""
+    from hgraphstorage_spark.pipeline.dedup import MINHASH_P
+
+    if not a:
+        return [None] * k
+    return [min((x + i * y) % MINHASH_P for x, y in zip(a, b)) for i in range(k)]
 
 
 class TestWithSignatureArrow:
     def test_with_signature_arrow_equals_fold(self, spark):
-        """The r13 Arrow k-permutation min must reproduce the nested
-        transform+array_min fold exactly: every permutation value is
-        integer arithmetic < 2^37 mod a 31-bit prime, so there is no
-        float anywhere to diverge. Real corpus, both hash modes, plus
-        empty/NULL shingle arrays (array_min(empty) is a NULL element
-        per permutation)."""
-        from hgraphstorage_spark.pipeline.dedup import _with_signature, shingle_hashes
+        """The Arrow k-permutation min equals the plain-Python fold over
+        base hashes computed JVM-side with the same column expressions:
+        every permutation value is integer arithmetic < 2^37 mod a 31-bit
+        prime, so there is no float anywhere to diverge. Real corpus, both
+        hash modes, plus empty/NULL shingle arrays."""
+        from hgraphstorage_spark.pipeline.dedup import MINHASH_P, _with_signature, shingle_hashes
+
+        P = F.lit(MINHASH_P)
+        second = {
+            "xxhash64": lambda h: F.pmod(F.xxhash64(h, F.lit(1)), P),
+            "md5": lambda h: F.pmod(F.shiftright(h, 29), P),
+        }
+
+        def check(sh, k, mode):
+            ab = sh.select(
+                "doc_id",
+                F.transform("sh", lambda h: F.pmod(h, P)).alias("a"),
+                F.transform("sh", second[mode]).alias("b"),
+            )
+            want = {r.doc_id: _ref_minhash(r.a, r.b, k) for r in ab.collect()}
+            got = {r.doc_id: r.sig for r in _with_signature(sh, k, mode).collect()}
+            assert got == want and len(got) > 0
+            return got
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         for mode in ("xxhash64", "md5"):
-            sh = shingle_hashes(docs, "text", "doc_id", 5, mode)
-            a = _with_signature(sh, 16, mode).select("doc_id", "sig")
-            s = _with_signature(sh, 16, mode, engine="sql").select("doc_id", "sig")
-            assert bag(a) == bag(s)
+            check(shingle_hashes(docs, "text", "doc_id", 5, mode), 16, mode)
 
         adv = spark.createDataFrame(
             [(1, [7, 11, 13]), (2, []), (3, None), (4, [0])],
             "doc_id long, sh array<long>",
         )
-        a = _with_signature(adv, 8, "xxhash64").select("doc_id", "sig")
-        s = _with_signature(adv, 8, "xxhash64", engine="sql").select("doc_id", "sig")
-        ra, rs = bag(a), bag(s)
-        assert ra == rs
-        by_id = {r[0]: r[1] for r in ra}
+        by_id = check(adv, 8, "xxhash64")
         assert by_id[2] == [None] * 8 and by_id[3] == [None] * 8
 
 
 class TestTfFrameArrow:
     def test_tf_frame_arrow_equals_fold(self, spark):
-        """The r13 Arrow bincount path must reproduce the aggregate-fold
-        bit-for-bit: counts are exact small integers in float64, and the
-        bucket hashes stay JVM-side in both engines, so the only thing
-        that could diverge is the counting itself. Both hash modes, real
-        corpus + adversarial rows (NULL / empty / whitespace-only text
-        must be excluded identically; d=1 collapses every token to one
-        bucket)."""
-        from hgraphstorage_spark.pipeline.text import _tf_frame
+        """The Arrow bincount equals the plain-Python count over bucket
+        ids computed JVM-side with the same expressions. Both hash modes,
+        real corpus + adversarial rows (NULL / empty / whitespace-only text
+        are excluded; d=1 collapses every token to one bucket)."""
+        from hgraphstorage_spark.pipeline.dedup import md5_long
+        from hgraphstorage_spark.pipeline.text import WS_RE, _tf_frame
+
+        def check(docs, d, mode):
+            bucket = {
+                "xxhash64": lambda t: F.pmod(F.xxhash64(t), F.lit(d)),
+                "md5": lambda t: md5_long(t) % d,
+            }[mode]
+            toks = F.filter(
+                F.split(F.lower(F.trim(F.col("text"))), WS_RE), lambda t: F.length(t) > 0
+            )
+            want = {}
+            for r in docs.select("doc_id", F.transform(toks, bucket).alias("bs")).collect():
+                if r.bs:
+                    tf = [0.0] * d
+                    for b in r.bs:
+                        tf[b] += 1.0
+                    want[r.doc_id] = tf
+            got = _tf_frame(docs, d, "text", "doc_id", mode, persist=False)
+            assert {r.doc_id: r._tf for r in got.collect()} == want and want
+            return want
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         for mode in ("xxhash64", "md5"):
-            a = _tf_frame(docs, 64, "text", "doc_id", mode, persist=False)
-            s = _tf_frame(docs, 64, "text", "doc_id", mode, persist=False, engine="sql")
-            assert bag(a) == bag(s)
+            check(docs, 64, mode)
 
         adv = spark.createDataFrame(
             [
@@ -4455,8 +4534,47 @@ class TestTfFrameArrow:
             "doc_id long, text string",
         )
         for d in (1, 8):
-            a = _tf_frame(adv, d, "text", "doc_id", "xxhash64", persist=False)
-            s = _tf_frame(adv, d, "text", "doc_id", "xxhash64", persist=False, engine="sql")
-            ra, rs = bag(a), bag(s)
-            assert ra == rs
-            assert {r[0] for r in ra} == {1, 5, 6}  # NULL/empty/ws-only excluded
+            assert set(check(adv, d, "xxhash64")) == {1, 5, 6}  # NULL/empty/ws-only excluded
+
+
+class TestArrowKernels:
+    """The list-column boundary helpers on plain pyarrow arrays (no Spark)."""
+
+    def test_sliced_array_reads_its_own_rows(self):
+        import numpy as np
+        import pyarrow as pa
+
+        from hgraphstorage_spark.pipeline.kernels import list_matrix, ragged
+
+        parent = pa.array([[1, 2], [3, 4], [5, 6], [7, 8]], pa.list_(pa.int64()))
+        sl = parent.slice(2)
+        assert sl.offset == 2
+        assert list_matrix(sl, dtype=np.int64).tolist() == [[5, 6], [7, 8]]
+        flat, lens = ragged(sl)
+        assert flat.tolist() == [5, 6, 7, 8] and lens.tolist() == [2, 2]
+        assert list_matrix(parent.slice(1, 2), dims=1).tolist() == [[3.0], [5.0]]
+
+    def test_null_and_empty_rows(self):
+        import numpy as np
+        import pyarrow as pa
+
+        from hgraphstorage_spark.pipeline.kernels import list_matrix, matrix_list, ragged
+
+        arr = pa.array([[1.0, 2.0], None, [3.0, 4.0]], pa.list_(pa.float64()))
+        assert list_matrix(arr).tolist() == [[1.0, 2.0], [0.0, 0.0], [3.0, 4.0]]
+        flat, lens = ragged(pa.array([[1], [], None, [2, 3]], pa.list_(pa.int64())))
+        assert flat.tolist() == [1, 2, 3] and lens.tolist() == [1, 0, 0, 2]
+        back = matrix_list(list_matrix(arr), null_rows=np.array([False, True, False]))
+        assert back.to_pylist() == [[1.0, 2.0], [None, None], [3.0, 4.0]]
+
+    def test_ragged_rows_raise_without_dims(self):
+        import pyarrow as pa
+
+        from hgraphstorage_spark.pipeline.kernels import list_matrix
+
+        arr = pa.array([[1.0, 2.0], [3.0]], pa.list_(pa.float64()))
+        with pytest.raises(ValueError):
+            list_matrix(arr)
+        with pytest.raises(ValueError):
+            list_matrix(arr, dims=2)
+        assert list_matrix(arr, dims=1).tolist() == [[1.0], [3.0]]

@@ -576,7 +576,7 @@ class TestStreamEmbedDedup:
         sigs = {
             r["vec_id"]: r["s"]
             for r in embs.select(
-                "vec_id", signature_bits(F.col("embedding"), dims=8, bits=16).alias("s")
+                "vec_id", signature_bits("embedding", dims=8, bits=16).alias("s")
             ).collect()
         }
         kept = {r["vec_id"] for r in stream_embed_dedup(embs, dims=8, bits=16).collect()}
