@@ -5,14 +5,19 @@ snapshots:
 
 - ``withTxManager`` / ``withTransaction`` (``LowLevelDB/src/Database/
   LowLevelDB.hs:33-89``) → ``GraphEngine`` holding a ledger of committed
-  snapshot versions plus staged (uncommitted) state;
+  snapshot versions; every write runs in a ``Transaction`` — one opened
+  by ``begin()``, or the engine's implicit one, which its own write
+  methods stage into and ``commit()`` / ``rollback()`` end. One write
+  path: each mutation is one op descriptor applied by
+  ``mutations.apply_op``, and ``Transaction.commit`` is the one commit;
 - MVCC visibility (``MVCC.hs:271-298``, the PostgreSQL rule) → a reader
   pins a committed snapshot version: everything in it is "committed before
   my start", everything staged by others simply isn't in it. Uncommitted
   writes are visible only through the transaction's own staged snapshot —
   the two halves of the reference's visibility predicate;
-- commit (``MVCC.hs:220-225``) → promote staged snapshot to a new version
-  in the ledger; rollback → discard staged state;
+- commit (``MVCC.hs:220-225``) → replay the op log onto the ledger head
+  (first-committer-wins) and publish it as a new version; rollback →
+  discard staged state;
 - index registry + retroactive build + uniqueness (``HGraphStorage/src/
   .../API.hs:494-516``) → index DataFrames rebuilt/maintained per commit,
   ``DuplicateIndexKey`` raised on violation (parity with the reference's
@@ -83,9 +88,12 @@ def check_unique(index_df: DataFrame, index_name: str) -> None:
 
 
 class Transaction:
-    """A concurrent transaction over a ``GraphEngine`` (reference
+    """A transaction over a ``GraphEngine`` (reference
     ``newTx``/``commit``/``rollback``, ``LowLevelDB/src/.../MVCC.hs`` and
-    the interleavings of ``MVCCSpec.hs:102-165``).
+    the interleavings of ``MVCCSpec.hs:102-165``). ``engine.begin()``
+    opens one explicitly; the engine's own write methods stage into an
+    implicit one, begun at the first write and ended by
+    ``engine.commit()`` / ``engine.rollback()``.
 
     Snapshot isolation, the reference's visibility rule mapped to
     immutable snapshots:
@@ -95,28 +103,26 @@ class Transaction:
       after start are never visible (``"doesn't see data added committed
       after it started"``), and rows they delete remain visible
       (``"still sees data deleted and committed after it started"``);
-    - writes stage privately as both a snapshot (for reads-own-writes) and
-      a replayable mutation log;
-    - ``commit()`` replays the log onto the CURRENT ledger head, so
+    - each write is recorded once, as its op descriptor, and applied with
+      ``mutations.apply_op`` to the staged snapshot (for reads-own-writes);
+    - ``commit()`` replays the op log onto the CURRENT ledger head, so
       non-conflicting concurrent committers all land (the Wikipedia
       example's tx1/tx3). Conflicts resolve first-committer-wins:
       a write-set intersection with any commit that landed after this
       transaction started raises ``WriteConflict``, and unique indexes are
-      re-checked against the merged state (``DuplicateIndexKey``).
+      re-checked against the merged state (``DuplicateIndexKey``). A bulk
+      DataFrame write has no op descriptor, so a transaction holding one
+      raises ``WriteConflict`` whenever the head moved.
     """
 
     def __init__(self, engine: "GraphEngine"):
         self._engine = engine
         self.start_version = engine.committed.version
-        self._base = engine.committed
-        self._staged: GraphSnapshot = self._base
-        self._log: list = []  # replay fns (pure snapshot -> snapshot)
-        self._ops: list = []  # serializable op descriptors (durable ledger)
+        self._staged: GraphSnapshot = engine.committed
+        self._ops: list = []  # op descriptors: the replay log a durable ledger persists
+        self._bulk = False  # a bulk DataFrame write is staged (no descriptor)
         self.written_ids: set[int] = set()
         self._done: str | None = None
-        # type-dictionary notes, applied to the engine model on commit
-        # (rolled-back transactions never touch the shared dictionary)
-        self._type_notes: list[tuple[str, str]] = []
 
     # -- reads -------------------------------------------------------------
     @property
@@ -134,92 +140,72 @@ class Transaction:
         if self._done is not None:
             raise RuntimeError(f"transaction already {self._done}")
 
-    def _apply(self, fn, written_ids, op=None) -> None:
-        """Stage a mutation and record it for commit-time replay. ``fn``
-        must be a pure snapshot -> snapshot function so replay onto a
-        different ledger head produces the same delta (ids are pinned at
-        first application, never re-generated at replay). ``op`` is the
-        JSON-serializable descriptor a durable ledger persists (every
-        row-level transaction op has one)."""
+    def _stage(self, op: list, written_ids) -> None:
+        """Apply one op descriptor to the staged snapshot and log it for
+        commit-time replay. Every ``COMPACT_EVERY`` ops the staged plans
+        are materialized (localCheckpoint) — the Spark analogue of the
+        reference's write buffering (GraphSettings buffer modes,
+        ``HGraphStorage/src/.../Types.hs:430-439``): per-record plan growth
+        would otherwise make the Nth single-row write pay an N-branch
+        union."""
         self._check_open()
-        self._staged = fn(self._staged)
-        self._log.append(fn)
-        if op is not None and self._ops is not None:
-            self._ops.append(op)
+        snap = mutations.apply_op(self._staged, op)
+        self._ops.append(op)
+        if len(self._ops) % self._engine.COMPACT_EVERY == 0:
+            snap = replace(
+                snap,
+                nodes=snap.nodes.localCheckpoint(),
+                edges=snap.edges.localCheckpoint(),
+                props=snap.props.localCheckpoint(),
+            )
+        self._staged = snap
         self.written_ids.update(written_ids)
 
     def add_nodes(self, rows, ids=None) -> list[int]:
         # ids come from the ENGINE-wide allocator (the reference's shared
         # TxManager counter): two live transactions can never mint the same
         # id, so their inserts are non-conflicting by construction. The
-        # reservation is pinned here, making commit-time replay stable.
-        rows = list(rows)
-        self._note_types("node_type", ((label, props) for label, props in rows))
-        new_ids = ids if ids is not None else self._engine._reserve_node_ids(len(rows), self._staged)
-        self._apply(
-            lambda s, r=rows, i=list(new_ids): mutations.add_nodes(s, r, i)[0],
-            new_ids,
-            op=["add_nodes", [[label, dict(props or {})] for label, props in rows], list(new_ids)],
-        )
+        # reservation is pinned in the descriptor, making replay stable.
+        rows = [[label, dict(props or {})] for label, props in rows]
+        new_ids = list(ids) if ids is not None else self._engine._reserve_node_ids(len(rows), self._staged)
+        self._stage(["add_nodes", rows, new_ids], new_ids)
         return new_ids
 
-    def _note_types(self, kind: str, labeled_props) -> None:
-        from hgraphstorage_spark import schemas
-
-        for label, props in labeled_props:
-            self._type_notes.append((kind, label))
-            for name, value in (props or {}).items():
-                for v in value if isinstance(value, list) else [value]:
-                    self._type_notes.append(("property_type", f"{name}:{schemas.infer_dtype(v)}"))
-
     def add_node(self, label: str, props: Mapping[str, object] | None = None) -> int:
-        return self.add_nodes([(label, props or {})])[0]
+        return self.add_nodes([(label, props)])[0]
 
     def add_edges(self, rows, ids=None) -> list[int]:
-        rows = list(rows)
-        self._note_types("edge_type", ((label, props) for _s, _d, label, props in rows))
-        new_ids = ids if ids is not None else self._engine._reserve_edge_ids(len(rows), self._staged)
-        self._apply(
-            lambda s, r=rows, i=list(new_ids): mutations.add_edges(s, r, i)[0],
-            new_ids,
-            op=[
-                "add_edges",
-                [[src, dst, label, dict(props or {})] for src, dst, label, props in rows],
-                list(new_ids),
-            ],
-        )
+        rows = [[src, dst, label, dict(props or {})] for src, dst, label, props in rows]
+        new_ids = list(ids) if ids is not None else self._engine._reserve_edge_ids(len(rows), self._staged)
+        self._stage(["add_edges", rows, new_ids], new_ids)
         return new_ids
 
     def add_edge(self, src: int, dst: int, label: str, props: Mapping[str, object] | None = None) -> int:
-        return self.add_edges([(src, dst, label, props or {})])[0]
+        return self.add_edges([(src, dst, label, props)])[0]
 
     def update_node(self, node_id: int, label: str, props: Mapping[str, object]) -> None:
-        self._apply(
-            lambda s: mutations.update_node(s, node_id, label, props),
-            [node_id],
-            op=["update_node", node_id, label, dict(props)],
-        )
+        self._stage(["update_node", node_id, label, dict(props)], [node_id])
 
     def delete_nodes(self, node_ids: list[int]) -> None:
-        self._apply(
-            lambda s: mutations.delete_nodes(s, node_ids),
-            node_ids,
-            op=["delete_nodes", list(node_ids)],
-        )
+        self._stage(["delete_nodes", list(node_ids)], node_ids)
 
     def delete_edges(self, edge_ids: list[int]) -> None:
-        self._apply(
-            lambda s: mutations.delete_edges(s, edge_ids),
-            edge_ids,
-            op=["delete_edges", list(edge_ids)],
-        )
+        self._stage(["delete_edges", list(edge_ids)], edge_ids)
 
     def set_properties(self, owner_id: int, owner_kind: str, props: Mapping[str, object]) -> None:
-        self._apply(
-            lambda s: mutations.set_properties(s, owner_id, owner_kind, props),
-            [owner_id],
-            op=["set_properties", owner_id, owner_kind, dict(props)],
-        )
+        self._stage(["set_properties", owner_id, owner_kind, dict(props)], [owner_id])
+
+    def add_nodes_df(self, nodes: DataFrame, props: DataFrame | None = None) -> None:
+        """Bulk form (the scale path): its write-set is unenumerated and it
+        has no op descriptor — the durable ledger materializes it."""
+        self._check_open()
+        self._staged = mutations.add_nodes_df(self._staged, nodes, props)
+        self._bulk = True
+
+    def add_edges_df(self, edges: DataFrame, props: DataFrame | None = None) -> None:
+        self._check_open()
+        self._staged = mutations.add_edges_df(self._staged, edges, props)
+        self._bulk = True
 
     # -- outcome -----------------------------------------------------------
     def commit(self) -> int:
@@ -230,7 +216,7 @@ class Transaction:
         (both leave the transaction open for rollback/inspection)."""
         self._check_open()
         eng = self._engine
-        if not self._log:
+        if not self._ops and not self._bulk:
             self._done = "committed"
             return eng.committed.version
         while True:
@@ -238,7 +224,14 @@ class Transaction:
             # ledger); in-memory engines are already current
             eng._refresh()
             head = eng.committed
+            merged = self._staged
             if head.version != self.start_version:
+                if self._bulk:
+                    raise WriteConflict(
+                        f"version {head.version} was committed after this transaction "
+                        f"started at version {self.start_version}, and its staged bulk "
+                        "DataFrame write cannot be replayed onto the new head"
+                    )
                 for version, written in eng._entries_after(self.start_version):
                     if written is None:
                         # a bulk DataFrame ingest published after we
@@ -257,22 +250,29 @@ class Transaction:
                             f"version {self.start_version}"
                         )
                 merged = head
-                for fn in self._log:
-                    merged = fn(merged)
-            else:
-                merged = self._staged
+                for op in self._ops:
+                    merged = mutations.apply_op(merged, op)
             merged = eng._rebuild_indexes(merged)
             for reg_name, _labels, _prop_names in merged.index_registry:
                 check_unique(merged.indexes[reg_name], reg_name)
             new_version = head.version + 1
-            if eng._try_publish(
-                merged.with_version(new_version), set(self.written_ids), self._ops, "tx"
-            ):
+            writes, ops = (None, None) if self._bulk else (set(self.written_ids), self._ops)
+            kind = "implicit" if self is eng._implicit else "tx"
+            if eng._try_publish(merged.with_version(new_version), writes, ops, kind):
                 break
             # CAS lost: someone claimed new_version between our conflict
             # check and publish — loop re-checks against the new entries
-        for kind, name in self._type_notes:  # M8 upsert, first-use order
-            eng.model.note(kind, name)
+        # M8 upsert in first-use order; rolled-back transactions never
+        # touch the shared dictionary
+        for op in self._ops:
+            if op[0] in ("add_nodes", "add_edges"):
+                for *_ends, label, props in op[1]:
+                    eng.model.note("node_type" if op[0] == "add_nodes" else "edge_type", label)
+                    for name, value in props.items():
+                        for v in value if isinstance(value, list) else [value]:
+                            eng.model.note_property(name, v)
+        if self._bulk:
+            eng.model.dirty = True  # labels live in the DataFrame; fold lazily
         self._done = "committed"
         return new_version
 
@@ -282,13 +282,12 @@ class Transaction:
 
 
 class GraphEngine:
-    """Engine session: a ledger of committed snapshots + staged mutations."""
+    """Engine session: a ledger of committed snapshots. The engine's own
+    write methods stage into one implicit :class:`Transaction`, begun at
+    the first write; ``commit()`` / ``rollback()`` end it."""
 
-    # row-level mutations buffer as plan branches; past this many staged
-    # mutations the plan is compacted (materialized) — the Spark analogue
-    # of the reference's write buffering (GraphSettings buffer modes,
-    # HGraphStorage/src/.../Types.hs:430-439): per-record plan growth would
-    # otherwise make the Nth single-row add pay an N-branch union
+    # staged ops between materializations of a transaction's plans
+    # (see Transaction._stage)
     COMPACT_EVERY = 64
 
     def __init__(self, spark: SparkSession, snapshot: GraphSnapshot | None = None):
@@ -297,21 +296,11 @@ class GraphEngine:
         # a pre-loaded snapshot keeps its version id (a durable engine
         # reopens at the persisted head, not at 0)
         self._ledger: list[GraphSnapshot] = [base if snapshot is not None else base.with_version(0)]
-        self._staged: GraphSnapshot | None = None
-        self._staged_base_version: int | None = None
-        self._stage_count = 0
-        # (version, written entity ids) per commit — transaction AND
-        # implicit path alike — the conflict-detection trail for
-        # first-committer-wins. ``None`` = unenumerated write-set (bulk
-        # DataFrame ingest): conflicts with every later transaction.
+        self._implicit: Transaction | None = None
+        # (version, written entity ids) per commit — the conflict-detection
+        # trail for first-committer-wins. ``None`` = unenumerated write-set
+        # (bulk DataFrame ingest): conflicts with every later transaction.
         self._commit_writes: list[tuple[int, set[int] | None]] = []
-        # entity ids written on the implicit staging path since the last
-        # implicit commit; None once a bulk-df write makes the set
-        # unenumerable
-        self._staged_writes: set[int] | None = set()
-        # serializable op descriptors mirroring _staged_writes; None once
-        # a bulk-df write makes the log unrepresentable as metadata
-        self._staged_ops: list | None = []
         # engine-wide id high-water marks spanning live transactions
         self._id_high: dict[str, int] = {}
         # maintained type dictionary (reference M8 upsert — ids in
@@ -328,6 +317,12 @@ class GraphEngine:
         each stages privately and commits first-committer-wins."""
         self._refresh()
         return Transaction(self)
+
+    def _tx(self) -> Transaction:
+        """The implicit transaction the engine's own writes stage into."""
+        if self._implicit is None:
+            self._implicit = self.begin()
+        return self._implicit
 
     # -- publish hooks (overridden by the durable ledger, store.py) --------
     def _refresh(self) -> None:
@@ -367,7 +362,7 @@ class GraphEngine:
     def current(self) -> GraphSnapshot:
         """Latest committed snapshot + own staged writes (the reference's
         "created by me" visibility half, ``MVCC.hs:287-298``)."""
-        return self._staged if self._staged is not None else self._ledger[-1]
+        return self._implicit.snapshot if self._implicit is not None else self._ledger[-1]
 
     @property
     def committed(self) -> GraphSnapshot:
@@ -385,228 +380,83 @@ class GraphEngine:
     def versions(self) -> list[int]:
         return [s.version for s in self._ledger]
 
-    # -- transactions ------------------------------------------------------
+    # -- the implicit transaction -----------------------------------------
     def commit(self) -> int:
-        """Promote staged state to a new committed version (T5). Enforces
-        unique indexes against the full post-commit state first — commit
-        fails atomically on violation.
-
-        This is the implicit single-writer path; mixing it with live
-        ``begin()`` transactions is guarded: if a transaction committed
-        after this implicit staging began, promoting the (older-based)
-        staged snapshot would silently erase that commit, so the engine
-        raises ``WriteConflict`` instead (rollback and replay, or use
-        transactions for all concurrent writers)."""
-        if self._staged is None:
-            return self._ledger[-1].version  # no writes: nothing to do (GC'd tx)
-        self._refresh()
-        if self._staged_base_version is not None and self._staged_base_version != self._ledger[-1].version:
-            raise WriteConflict(
-                f"a concurrent writer committed version {self._ledger[-1].version} after "
-                f"this implicit staging began at version {self._staged_base_version}; "
-                "promoting the staged snapshot would overwrite it — rollback and replay, "
-                "or use engine.begin() transactions for every concurrent writer"
-            )
-        staged = self._rebuild_indexes(self._staged)
-        for reg_name, labels, prop_names in staged.index_registry:
-            check_unique(staged.indexes[reg_name], reg_name)
-        new_version = self._ledger[-1].version + 1
-        # publish with the write-set: a transaction that started before
-        # this implicit commit must see it in the conflict trail, or its
-        # replay would silently overwrite these entities
-        # (first-committer-wins applies to BOTH write paths)
-        ok = self._try_publish(
-            staged.with_version(new_version),
-            set(self._staged_writes) if self._staged_writes is not None else None,
-            list(self._staged_ops) if self._staged_ops is not None else None,
-            "implicit",
-        )
-        if not ok:
-            # durable CAS lost between refresh and publish: the implicit
-            # path has no replay log isolation, so surface the conflict
-            raise WriteConflict(
-                f"another process claimed version {new_version} concurrently; "
-                "rollback and replay, or use engine.begin() transactions"
-            )
-        self._staged = None
-        self._staged_base_version = None
-        self._staged_writes = set()
-        self._staged_ops = []
-        return new_version
+        """Commit the engine's implicit transaction (T5): first-committer-
+        wins like any ``begin()`` transaction, so a concurrent commit with
+        a disjoint write-set is kept and these writes replay onto it.
+        Raises ``WriteConflict`` / ``DuplicateIndexKey`` and stays open
+        for ``rollback()`` on failure."""
+        if self._implicit is None:
+            return self.committed.version
+        version = self._implicit.commit()
+        self._implicit = None
+        return version
 
     def rollback(self) -> None:
-        self._staged = None
-        self._staged_base_version = None
-        self._staged_writes = set()
-        self._staged_ops = []
+        if self._implicit is not None:
+            self._implicit.rollback()
+            self._implicit = None
 
     def checkpoint(self, path: str) -> None:
         """Reference S7 ``checkpoint``: force-materialize the committed
         snapshot to storage."""
         self.committed.write(path)
 
-    # -- mutations (staged until commit) ----------------------------------
-    def _stage(self, snap: GraphSnapshot, written_ids=(), op=None) -> None:
-        if self._staged is None:
-            # pin the ledger head this implicit write run is based on
-            self._staged_base_version = self._ledger[-1].version
-        self._staged = snap
-        if written_ids is None:
-            self._staged_writes = None  # bulk df write: set unenumerable
-            self._staged_ops = None  # and the op log is the data itself
-        else:
-            if self._staged_writes is not None:
-                self._staged_writes.update(written_ids)
-            if self._staged_ops is not None:
-                # a write without an op descriptor can't be replayed from
-                # metadata — degrade to materialization, never to loss
-                self._staged_ops = self._staged_ops + [op] if op is not None else None
-        self._stage_count += 1
-        if self._stage_count % self.COMPACT_EVERY == 0:
-            self.compact()
-
-    def compact(self) -> None:
-        """Materialize the staged snapshot's plans (localCheckpoint), so a
-        long row-at-a-time mutation session stays O(1) per call instead of
-        re-evaluating an ever-deeper union chain."""
-        if self._staged is None:
-            return
-        self._staged = replace(
-            self._staged,
-            nodes=self._staged.nodes.localCheckpoint(),
-            edges=self._staged.edges.localCheckpoint(),
-            props=self._staged.props.localCheckpoint(),
-        )
-
     def model_df(self) -> DataFrame:
         """The maintained type dictionary as a DataFrame (reference M8);
         folds in any bulk-ingested types first."""
         if self.model.dirty:
-            self.model.fold_snapshot(self.current)
+            self.model.fold_snapshot(self.committed)
         return self.model.to_df(self.spark)
 
-    def _note_node_types(self, rows) -> None:
-        for label, props in rows:
-            self.model.note("node_type", label)
-            for name, value in (props or {}).items():
-                for v in value if isinstance(value, list) else [value]:
-                    self.model.note_property(name, v)
-
-    def _note_edge_types(self, rows) -> None:
-        for _src, _dst, label, props in rows:
-            self.model.note("edge_type", label)
-            for name, value in (props or {}).items():
-                for v in value if isinstance(value, list) else [value]:
-                    self.model.note_property(name, v)
-
+    # -- writes: staged in the implicit transaction until commit -----------
     def add_nodes(self, rows, ids=None) -> list[int]:
-        # ids come from the ENGINE-wide allocator, same as the transaction
-        # path: a live begin() transaction may already have reserved ids
-        # past this snapshot's max, and allocating from the snapshot alone
-        # would mint duplicates once both commit
-        rows = list(rows)
-        self._note_node_types(rows)
-        if ids is None:
-            ids = self._reserve_node_ids(len(rows), self.current)
-        snap, new_ids = mutations.add_nodes(self.current, rows, ids)
-        self._stage(
-            snap,
-            new_ids,
-            op=["add_nodes", [[label, dict(props or {})] for label, props in rows], list(new_ids)],
-        )
-        return new_ids
+        return self._tx().add_nodes(rows, ids)
 
     def add_node(self, label: str, props: Mapping[str, object] | None = None) -> int:
-        return self.add_nodes([(label, props or {})])[0]
+        return self._tx().add_node(label, props)
 
     def add_edges(self, rows, ids=None) -> list[int]:
-        rows = list(rows)
-        self._note_edge_types(rows)
-        if ids is None:
-            ids = self._reserve_edge_ids(len(rows), self.current)
-        snap, new_ids = mutations.add_edges(self.current, rows, ids)
-        self._stage(
-            snap,
-            new_ids,
-            op=[
-                "add_edges",
-                [[src, dst, label, dict(props or {})] for src, dst, label, props in rows],
-                list(new_ids),
-            ],
-        )
-        return new_ids
+        return self._tx().add_edges(rows, ids)
 
     def add_edge(self, src: int, dst: int, label: str, props: Mapping[str, object] | None = None) -> int:
-        return self.add_edges([(src, dst, label, props or {})])[0]
+        return self._tx().add_edge(src, dst, label, props)
 
     def add_nodes_df(self, nodes: DataFrame, props: DataFrame | None = None) -> None:
-        self.model.dirty = True  # labels live in the DataFrame; fold lazily
-        self._stage(mutations.add_nodes_df(self.current, nodes, props), written_ids=None)
+        self._tx().add_nodes_df(nodes, props)
 
     def add_edges_df(self, edges: DataFrame, props: DataFrame | None = None) -> None:
-        self.model.dirty = True
-        self._stage(mutations.add_edges_df(self.current, edges, props), written_ids=None)
+        self._tx().add_edges_df(edges, props)
 
     def update_node(self, node_id: int, label: str, props: Mapping[str, object]) -> None:
-        self._stage(
-            mutations.update_node(self.current, node_id, label, props),
-            [node_id],
-            op=["update_node", node_id, label, dict(props)],
-        )
+        self._tx().update_node(node_id, label, props)
 
     def delete_nodes(self, node_ids: list[int]) -> None:
-        self._stage(
-            mutations.delete_nodes(self.current, node_ids),
-            node_ids,
-            op=["delete_nodes", list(node_ids)],
-        )
+        self._tx().delete_nodes(node_ids)
 
     def delete_edges(self, edge_ids: list[int]) -> None:
-        self._stage(
-            mutations.delete_edges(self.current, edge_ids),
-            edge_ids,
-            op=["delete_edges", list(edge_ids)],
-        )
+        self._tx().delete_edges(edge_ids)
 
     def set_properties(self, owner_id: int, owner_kind: str, props: Mapping[str, object]) -> None:
-        self._stage(
-            mutations.set_properties(self.current, owner_id, owner_kind, props),
-            [owner_id],
-            op=["set_properties", owner_id, owner_kind, dict(props)],
-        )
+        self._tx().set_properties(owner_id, owner_kind, props)
 
     # -- indexes -----------------------------------------------------------
     def add_index(self, name: str, labels: Sequence[str] = (), prop_names: Sequence[str] = ()) -> None:
-        """Register + retroactively build an index (reference X1). Raises
+        """Register + retroactively build an index (reference X1). On a
+        clean engine the registration commits at once (the reference
+        persists the registry on addIndex, ``API.hs:509``) and raises
         DuplicateIndexKey if existing data violates uniqueness
-        (``APITest.hs:158-165`` retroactive-indexing scenario)."""
-        op = ["add_index", name, list(labels), list(prop_names)]
-        if self._staged is not None:
-            snap = self.current
-            registry = snap.index_registry + ((name, tuple(labels), tuple(prop_names)),)
-            idx = build_index(snap, labels, prop_names)
-            check_unique(idx, name)
-            indexes = dict(snap.indexes)
-            indexes[name] = idx
-            self._staged = replace(snap, index_registry=registry, indexes=indexes)
-            if self._staged_ops is not None:
-                self._staged_ops.append(op)
-            return
-        # registering an index on a clean engine commits immediately (the
-        # reference persists the registry on addIndex, API.hs:509); retry
-        # on a lost durable CAS — index registration replays cleanly
-        while True:
-            self._refresh()
-            snap = self.current
-            registry = snap.index_registry + ((name, tuple(labels), tuple(prop_names)),)
-            idx = build_index(snap, labels, prop_names)
-            check_unique(idx, name)
-            indexes = dict(snap.indexes)
-            indexes[name] = idx
-            staged = replace(snap, index_registry=registry, indexes=indexes)
-            new_version = self._ledger[-1].version + 1
-            if self._try_publish(staged.with_version(new_version), set(), [op], "index"):
-                return
+        (``APITest.hs:158-165`` retroactive-indexing scenario); with writes
+        staged it joins them and is checked at their commit."""
+        clean = self._implicit is None
+        self._tx()._stage(["add_index", name, list(labels), list(prop_names)], ())
+        if clean:
+            try:
+                self.commit()
+            except DuplicateIndexKey:
+                self.rollback()
+                raise
 
     def _rebuild_indexes(self, snap: GraphSnapshot) -> GraphSnapshot:
         """Index maintenance on commit (reference M1/M2 delta maintenance,

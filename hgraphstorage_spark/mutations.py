@@ -55,7 +55,8 @@ def add_nodes(
 
     ``rows`` is an iterable of (label, props). Returns (snapshot, new ids).
     Index maintenance + uniqueness enforcement happen in
-    ``GraphEngine.commit`` against registered indexes.
+    ``Transaction.commit``, the one commit path, against registered
+    indexes.
     """
     rows = list(rows)
     spark = snap.nodes.sparkSession
@@ -160,14 +161,12 @@ def delete_nodes(snap: GraphSnapshot, node_ids: list[int]) -> GraphSnapshot:
     ``API.hs:421-429``); here the cascade is three filters in one plan.
     Behavior pinned by ``APITest.hs:55-68``."""
     ids = list(node_ids)
-    dead_edges = snap.edges.filter(F.col("src").isin(ids) | F.col("dst").isin(ids)).select("id")
     surviving_edges = snap.edges.filter(~(F.col("src").isin(ids) | F.col("dst").isin(ids)))
     node_props_gone = ~((F.col("owner_kind") == schemas.NODE_KIND) & F.col("owner_id").isin(ids))
     edge_props = snap.props.filter(F.col("owner_kind") == schemas.EDGE_KIND)
     surviving_edge_props = edge_props.join(
         surviving_edges.select(F.col("id").alias("owner_id")), "owner_id", "left_semi"
     )
-    _ = dead_edges  # kept for readability; the anti set is derived from surviving_edges
     return replace(
         snap,
         nodes=snap.nodes.filter(~F.col("id").isin(ids)),
@@ -212,3 +211,37 @@ def set_properties(
     if rows:
         kept = kept.unionByName(spark.createDataFrame(rows, schemas.PROPS_SCHEMA))
     return replace(snap, props=kept)
+
+
+def apply_op(snap: GraphSnapshot, op: list) -> GraphSnapshot:
+    """Apply one mutation op descriptor — the one encoding of a row-level
+    write, applied at stage time, in commit-time replay onto a moved head
+    and on reopen of a durable store. The seven shapes:
+
+    - ``["add_nodes", [[label, props], ...], ids]``
+    - ``["add_edges", [[src, dst, label, props], ...], ids]``
+    - ``["update_node", node_id, label, props]``
+    - ``["delete_nodes", ids]`` / ``["delete_edges", ids]``
+    - ``["set_properties", owner_id, owner_kind, props]``
+    - ``["add_index", name, labels, prop_names]`` — registers only; the
+      index DataFrame is built (and uniqueness checked) at commit.
+
+    Ids are pinned in the descriptor, so replay onto a different head
+    produces the same delta."""
+    name, args = op[0], op[1:]
+    if name == "add_nodes":
+        return add_nodes(snap, *args)[0]
+    if name == "add_edges":
+        return add_edges(snap, *args)[0]
+    if name == "update_node":
+        return update_node(snap, *args)
+    if name == "delete_nodes":
+        return delete_nodes(snap, *args)
+    if name == "delete_edges":
+        return delete_edges(snap, *args)
+    if name == "set_properties":
+        return set_properties(snap, *args)
+    if name == "add_index":
+        registry = snap.index_registry + ((args[0], tuple(args[1]), tuple(args[2])),)
+        return replace(snap, index_registry=registry)
+    raise ValueError(f"unknown mutation op {name!r}")

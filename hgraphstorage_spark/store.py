@@ -43,17 +43,20 @@ import os
 import tempfile
 import uuid
 from dataclasses import replace
-from typing import Mapping, Sequence
+from typing import Mapping
 
 from pyspark.sql import SparkSession
 
 from hgraphstorage_spark import mutations
+from hgraphstorage_spark.engine import GraphEngine
 from hgraphstorage_spark.snapshot import GraphSnapshot
 
 
 # -- op serialization --------------------------------------------------------
-# bytes are the one property type JSON can't carry; tag them. (A literal
-# JSON property {"__bytes__": ...} would be mis-decoded — documented.)
+# bytes are the one property type JSON can't carry; they travel tagged as
+# {"__bytes__": hex}. A JSON value that is itself a one-key dict under a
+# tag key is escaped as {"__json__": value}, so it decodes as written.
+_TAGS = ("__bytes__", "__json__")
 
 
 def _enc(v):
@@ -62,7 +65,8 @@ def _enc(v):
     if isinstance(v, (list, tuple)):
         return [_enc(x) for x in v]
     if isinstance(v, Mapping):
-        return {k: _enc(x) for k, x in v.items()}
+        out = {k: _enc(x) for k, x in v.items()}
+        return {"__json__": out} if len(out) == 1 and next(iter(out)) in _TAGS else out
     return v
 
 
@@ -70,32 +74,12 @@ def _dec(v):
     if isinstance(v, dict):
         if set(v) == {"__bytes__"}:
             return bytes.fromhex(v["__bytes__"])
+        if set(v) == {"__json__"}:
+            v = v["__json__"]
         return {k: _dec(x) for k, x in v.items()}
     if isinstance(v, list):
         return [_dec(x) for x in v]
     return v
-
-
-def apply_op(snap: GraphSnapshot, op: list) -> GraphSnapshot:
-    """Replay one serialized mutation op (see the engine's write methods
-    for where each descriptor is recorded)."""
-    name, args = op[0], [_dec(a) for a in op[1:]]
-    if name == "add_nodes":
-        return mutations.add_nodes(snap, [tuple(r) for r in args[0]], list(args[1]))[0]
-    if name == "add_edges":
-        return mutations.add_edges(snap, [tuple(r) for r in args[0]], list(args[1]))[0]
-    if name == "update_node":
-        return mutations.update_node(snap, args[0], args[1], args[2])
-    if name == "delete_nodes":
-        return mutations.delete_nodes(snap, list(args[0]))
-    if name == "delete_edges":
-        return mutations.delete_edges(snap, list(args[0]))
-    if name == "set_properties":
-        return mutations.set_properties(snap, args[0], args[1], args[2])
-    if name == "add_index":
-        registry = snap.index_registry + ((args[0], tuple(args[1]), tuple(args[2])),)
-        return replace(snap, index_registry=registry)
-    raise ValueError(f"unknown ledger op {name!r}")
 
 
 # -- pluggable CAS publish backends ------------------------------------------
@@ -347,196 +331,176 @@ class VersionLedger:
         return rel, os.path.join(self.root, rel)
 
 
-class DurableGraphEngine:
+class DurableGraphEngine(GraphEngine):
     """A ``GraphEngine`` whose commits publish to a :class:`VersionLedger`
     — reopening the same root (same or different process) sees every
-    committed version, and first-committer-wins holds across engines.
+    committed version, and first-committer-wins holds across engines."""
 
-    Import placement: defined via a factory below to avoid a circular
-    import with ``engine`` (which this module extends).
-    """
-
-    def __new__(
-        cls,
+    def __init__(
+        self,
         spark: SparkSession,
         root: str,
         checkpoint_every: int = 16,
         cas: CasBackend | None = None,
     ):
-        return _durable_engine_cls()(spark, root, checkpoint_every, cas)
+        self.ledger = VersionLedger(root, cas=cas)
+        self.root = root
+        self.checkpoint_every = checkpoint_every
+        head = self.ledger.head_version()
+        snap = self._reconstruct(spark, head) if head > 0 else None
+        super().__init__(spark, snapshot=snap)
+        if snap is not None:
+            self._ledger[-1] = snap  # keep the reconstructed version id
 
-
-def _durable_engine_cls():
-    from hgraphstorage_spark.engine import GraphEngine
-
-    class _DurableGraphEngine(GraphEngine):
-        def __init__(
-            self,
-            spark: SparkSession,
-            root: str,
-            checkpoint_every: int = 16,
-            cas: CasBackend | None = None,
-        ):
-            self.ledger = VersionLedger(root, cas=cas)
-            self.root = root
-            self.checkpoint_every = checkpoint_every
-            head = self.ledger.head_version()
-            snap = self._reconstruct(spark, head) if head > 0 else None
-            super().__init__(spark, snapshot=snap)
-            if snap is not None:
-                self._ledger[-1] = snap  # keep the reconstructed version id
-
-        # -- state reconstruction (open / refresh / time travel) ----------
-        def _reconstruct(self, spark: SparkSession, version: int) -> GraphSnapshot:
-            entries = [e for e in self.ledger.read_entries() if e["version"] <= version]
-            if not entries and version > 0:
-                raise KeyError(
-                    f"version {version} predates the compaction horizon "
-                    "(its ledger entries were folded into a later checkpoint)"
+    # -- state reconstruction (open / refresh / time travel) ----------
+    def _reconstruct(self, spark: SparkSession, version: int) -> GraphSnapshot:
+        entries = [e for e in self.ledger.read_entries() if e["version"] <= version]
+        if not entries and version > 0:
+            raise KeyError(
+                f"version {version} predates the compaction horizon "
+                "(its ledger entries were folded into a later checkpoint)"
+            )
+        base_idx, snap = -1, GraphSnapshot.empty(spark)
+        for i in range(len(entries) - 1, -1, -1):
+            if entries[i].get("snapshot"):
+                base_idx = i
+                snap = GraphSnapshot.read(
+                    spark,
+                    os.path.join(self.root, entries[i]["snapshot"]),
+                    version=entries[i]["version"],
                 )
-            base_idx, snap = -1, GraphSnapshot.empty(spark)
-            for i in range(len(entries) - 1, -1, -1):
-                if entries[i].get("snapshot"):
-                    base_idx = i
-                    snap = GraphSnapshot.read(
-                        spark,
-                        os.path.join(self.root, entries[i]["snapshot"]),
-                        version=entries[i]["version"],
-                    )
-                    break
-            for e in entries[base_idx + 1 :]:
-                for op in e.get("ops") or []:
-                    snap = apply_op(snap, op)
-            registry = tuple(
-                (name, tuple(labels), tuple(props))
-                for name, labels, props in (entries[-1]["registry"] if entries else [])
-            )
-            snap = replace(snap, index_registry=registry)
-            snap = self._rebuild_indexes(snap) if registry else snap
-            return snap.with_version(version)
+                break
+        for e in entries[base_idx + 1 :]:
+            for op in e.get("ops") or []:
+                snap = mutations.apply_op(snap, _dec(op))
+        registry = tuple(
+            (name, tuple(labels), tuple(props))
+            for name, labels, props in (entries[-1]["registry"] if entries else [])
+        )
+        snap = replace(snap, index_registry=registry)
+        snap = self._rebuild_indexes(snap) if registry else snap
+        return snap.with_version(version)
 
-        def _refresh(self) -> None:
-            head = self.ledger.head_version()
-            if head > self._ledger[-1].version:
-                self._ledger.append(self._reconstruct(self.spark, head))
+    def _refresh(self) -> None:
+        head = self.ledger.head_version()
+        if head > self._ledger[-1].version:
+            self._ledger.append(self._reconstruct(self.spark, head))
 
-        def snapshot_at(self, version: int) -> GraphSnapshot:
-            for s in self._ledger:
-                if s.version == version:
-                    return s
-            if 0 < version <= self.ledger.head_version():
-                return self._reconstruct(self.spark, version)
-            if version == 0:
-                return GraphSnapshot.empty(self.spark)
-            raise KeyError(f"no committed snapshot version {version}")
+    def snapshot_at(self, version: int) -> GraphSnapshot:
+        for s in self._ledger:
+            if s.version == version:
+                return s
+        if 0 < version <= self.ledger.head_version():
+            return self._reconstruct(self.spark, version)
+        if version == 0:
+            return GraphSnapshot.empty(self.spark)
+        raise KeyError(f"no committed snapshot version {version}")
 
-        @property
-        def versions(self) -> list[int]:
-            return [0] + [e["version"] for e in self.ledger.read_entries()]
+    @property
+    def versions(self) -> list[int]:
+        return [0] + [e["version"] for e in self.ledger.read_entries()]
 
-        def vacuum(self) -> list[str]:
-            """Delete orphaned snapshot materializations — dirs written by
-            committers that lost their CAS race. Safe rule: an orphan
-            ``v{N}-uuid`` with N <= head can never become referenced
-            (version N is already claimed by a different entry); an
-            in-flight committer for head+1 is untouched. Returns the
-            removed relative paths."""
-            import shutil
+    def vacuum(self) -> list[str]:
+        """Delete orphaned snapshot materializations — dirs written by
+        committers that lost their CAS race. Safe rule: an orphan
+        ``v{N}-uuid`` with N <= head can never become referenced
+        (version N is already claimed by a different entry); an
+        in-flight committer for head+1 is untouched. Returns the
+        removed relative paths."""
+        import shutil
 
-            head = self.ledger.head_version()
-            live = {
-                e["snapshot"] for e in self.ledger.read_entries() if e.get("snapshot")
-            }
-            removed = []
-            for name in os.listdir(self.ledger.versions_dir):
-                rel = os.path.join("versions", name)
-                if rel in live or not name.startswith("v"):
-                    continue
-                try:
-                    v = int(name[1:13])
-                except ValueError:
-                    continue
-                if v <= head:
-                    shutil.rmtree(os.path.join(self.ledger.versions_dir, name), ignore_errors=True)
-                    removed.append(rel)
-            return removed
+        head = self.ledger.head_version()
+        live = {
+            e["snapshot"] for e in self.ledger.read_entries() if e.get("snapshot")
+        }
+        removed = []
+        for name in os.listdir(self.ledger.versions_dir):
+            rel = os.path.join("versions", name)
+            if rel in live or not name.startswith("v"):
+                continue
+            try:
+                v = int(name[1:13])
+            except ValueError:
+                continue
+            if v <= head:
+                shutil.rmtree(os.path.join(self.ledger.versions_dir, name), ignore_errors=True)
+                removed.append(rel)
+        return removed
 
-        def compact(self) -> dict:
-            """Bound the ledger: drop every entry OLDER than the newest
-            checkpointed (snapshot-bearing) entry, then vacuum the
-            snapshot dirs nothing references anymore. The reference keeps
-            full history in its trie-backed manager; an unbounded op-log
-            on a 100 TB store is an operational liability, so truncation
-            is explicit and the trade is stated: time travel to versions
-            before the horizon raises ``KeyError`` afterwards (the data
-            needed to rebuild them is folded into the checkpoint).
+    def compact(self) -> dict:
+        """Bound the ledger: drop every entry OLDER than the newest
+        checkpointed (snapshot-bearing) entry, then vacuum the
+        snapshot dirs nothing references anymore. The reference keeps
+        full history in its trie-backed manager; an unbounded op-log
+        on a 100 TB store is an operational liability, so truncation
+        is explicit and the trade is stated: time travel to versions
+        before the horizon raises ``KeyError`` afterwards (the data
+        needed to rebuild them is folded into the checkpoint).
 
-            Concurrency-safe by the same argument as ``vacuum``: entries
-            below an existing checkpoint can never be needed to
-            reconstruct any version >= the horizon, and concurrent
-            readers tolerate the listdir/open race (``read_entries``
-            skips vanished files). Returns {"horizon", "removed_entries",
-            "removed_dirs"}."""
-            entries = self.ledger.read_entries()
-            horizon = max(
-                (e["version"] for e in entries if e.get("snapshot")), default=0
-            )
-            removed = 0
-            if horizon:
-                for e in entries:
-                    if e["version"] < horizon:
-                        try:
-                            os.unlink(self.ledger._path(e["version"]))
-                            removed += 1
-                        except FileNotFoundError:
-                            pass
-            dirs = self.vacuum()
-            # drop in-memory pins below the horizon too (they hold plans
-            # over parquet dirs vacuum may have removed)
-            self._ledger = [
-                s for s in self._ledger if s.version == 0 or s.version >= horizon
-            ] or [GraphSnapshot.empty(self.spark)]
-            return {"horizon": horizon, "removed_entries": removed, "removed_dirs": dirs}
+        Concurrency-safe by the same argument as ``vacuum``: entries
+        below an existing checkpoint can never be needed to
+        reconstruct any version >= the horizon, and concurrent
+        readers tolerate the listdir/open race (``read_entries``
+        skips vanished files). Returns {"horizon", "removed_entries",
+        "removed_dirs"}."""
+        entries = self.ledger.read_entries()
+        horizon = max(
+            (e["version"] for e in entries if e.get("snapshot")), default=0
+        )
+        removed = 0
+        if horizon:
+            for e in entries:
+                if e["version"] < horizon:
+                    try:
+                        os.unlink(self.ledger._path(e["version"]))
+                        removed += 1
+                    except FileNotFoundError:
+                        pass
+        dirs = self.vacuum()
+        # drop in-memory pins below the horizon too (they hold plans
+        # over parquet dirs vacuum may have removed)
+        self._ledger = [
+            s for s in self._ledger if s.version == 0 or s.version >= horizon
+        ] or [GraphSnapshot.empty(self.spark)]
+        return {"horizon": horizon, "removed_entries": removed, "removed_dirs": dirs}
 
-        # -- conflict trail + publish (the cross-process halves) ----------
-        def _entries_after(self, version: int):
-            return [
-                (e["version"], set(e["writes"]) if e["writes"] is not None else None)
-                for e in self.ledger.read_entries(after=version)
-            ]
+    # -- conflict trail + publish (the cross-process halves) ----------
+    def _entries_after(self, version: int):
+        return [
+            (e["version"], set(e["writes"]) if e["writes"] is not None else None)
+            for e in self.ledger.read_entries(after=version)
+        ]
 
-        def _try_publish(self, snapshot: GraphSnapshot, writes, ops, kind: str) -> bool:
-            v = snapshot.version
-            payload = {
-                "kind": kind,
-                "writes": sorted(writes) if writes is not None else None,
-                "ops": None,
-                "snapshot": None,
-                "registry": [
-                    [name, list(labels), list(props)]
-                    for name, labels, props in snapshot.index_registry
-                ],
-            }
-            materialize = ops is None or v % self.checkpoint_every == 0
-            if materialize:
-                rel, full = self.ledger.new_snapshot_dir(v)
-                snapshot.write(full)
-                payload["snapshot"] = rel
-            else:
-                payload["ops"] = [_enc(list(op)) for op in ops]
-            if not self.ledger.try_publish(v, payload):
-                return False
-            if materialize:
-                # swap in the parquet-backed plan: bounded lineage for this
-                # process, and identical to what any other process reads
-                reread = GraphSnapshot.read(self.spark, full, version=v)
-                reread = replace(reread, index_registry=snapshot.index_registry)
-                reread = self._rebuild_indexes(reread) if snapshot.index_registry else reread
-                snapshot = reread
-            self._ledger.append(snapshot)
-            return True
-
-    return _DurableGraphEngine
+    def _try_publish(self, snapshot: GraphSnapshot, writes, ops, kind: str) -> bool:
+        v = snapshot.version
+        payload = {
+            "kind": kind,
+            "writes": sorted(writes) if writes is not None else None,
+            "ops": None,
+            "snapshot": None,
+            "registry": [
+                [name, list(labels), list(props)]
+                for name, labels, props in snapshot.index_registry
+            ],
+        }
+        materialize = ops is None or v % self.checkpoint_every == 0
+        if materialize:
+            rel, full = self.ledger.new_snapshot_dir(v)
+            snapshot.write(full)
+            payload["snapshot"] = rel
+        else:
+            payload["ops"] = [_enc(list(op)) for op in ops]
+        if not self.ledger.try_publish(v, payload):
+            return False
+        if materialize:
+            # swap in the parquet-backed plan: bounded lineage for this
+            # process, and identical to what any other process reads
+            reread = GraphSnapshot.read(self.spark, full, version=v)
+            reread = replace(reread, index_registry=snapshot.index_registry)
+            reread = self._rebuild_indexes(reread) if snapshot.index_registry else reread
+            snapshot = reread
+        self._ledger.append(snapshot)
+        return True
 
 
 def open_graph(

@@ -383,6 +383,7 @@ class TestModelMaintenance:
         eng = GraphEngine(spark)
         eng.add_node("A", {})
         eng.add_node("A", {})  # re-use: same id, no growth
+        eng.commit()  # notes land at commit, as on the begin() path
         assert eng.model.lookup("node_type", "A") == 1
         rows = eng.model_df().collect()
         assert len([r for r in rows if r["kind"] == "node_type"]) == 1
@@ -409,22 +410,48 @@ class TestModelMaintenance:
         tx2.commit()
         assert eng.model.lookup("node_type", "Real") == 1
 
+    def test_rolled_back_implicit_write_leaves_model_untouched(self, spark):
+        eng = GraphEngine(spark)
+        eng.add_node("Ghost", {"g": 1})
+        eng.rollback()
+        assert eng.model.lookup("node_type", "Ghost") is None
+        assert eng.model.lookup("property_type", "g:integer") is None
+        eng.add_node("Real", {})
+        eng.commit()
+        assert eng.model.lookup("node_type", "Real") == 1
+
 
 class TestMixedWriterGuard:
     def test_implicit_commit_refuses_to_erase_tx_commit(self, spark):
         """Implicit staging based on version N must not publish over a
-        transaction that committed N+1 in the meantime (lost update)."""
-        from hgraphstorage_spark.engine import WriteConflict
-
+        transaction that committed N+1 in the meantime (lost update): the
+        disjoint implicit writes replay onto N+1, so both land."""
         eng = GraphEngine(spark)
         eng.add_node("Implicit", {})       # implicit staging begins at v0
         tx = eng.begin()
         tx.add_node("Concurrent", {})
         tx.commit()                        # v1 lands
+        assert eng.commit() == 2           # replayed onto v1, not over it
+        assert self_keys(eng) == [("Concurrent",), ("Implicit",)]
+
+    def test_implicit_update_conflicts_with_tx_commit_of_same_node(self, spark):
+        """First-committer-wins on the implicit path: an implicit update of
+        a node a concurrent transaction already committed loses."""
+        from hgraphstorage_spark.engine import WriteConflict
+
+        eng = GraphEngine(spark)
+        nid = eng.add_node("Doc", {"k": "v0"})
+        eng.commit()                          # v1
+        eng.update_node(nid, "Doc", {"k": "implicit"})
+        tx = eng.begin()
+        tx.update_node(nid, "Doc", {"k": "tx"})
+        tx.commit()                           # v2 writes nid first
         with pytest.raises(WriteConflict):
-            eng.commit()                   # would silently erase v1
+            eng.commit()
         eng.rollback()
-        assert self_keys(eng) == [("Concurrent",)]
+        assert eng.committed.version == 2
+        keys = [r["text_v"] for r in eng.committed.props.filter("name = 'k'").collect()]
+        assert keys == ["tx"]
 
     def test_implicit_commit_fine_when_no_interleaving(self, spark):
         eng = GraphEngine(spark)

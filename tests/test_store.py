@@ -20,7 +20,7 @@ import tempfile
 
 import pytest
 
-from hgraphstorage_spark import DurableGraphEngine, WriteConflict
+from hgraphstorage_spark import DurableGraphEngine, WriteConflict, open_graph
 from hgraphstorage_spark.store import (
     ConditionalPutCas,
     LinkCas,
@@ -144,6 +144,16 @@ class TestOpSerialization:
         op = ["add_nodes", [["N", {"b": b"\x00\xff", "multi": [b"a", 1, "s"]}]], [1]]
         assert _dec(json.loads(json.dumps(_enc(op)))) == op
 
+    def test_tag_shaped_json_roundtrip(self):
+        """JSON values shaped like the bytes tag (or its escape) decode
+        as written, not as binary."""
+        op = [
+            "set_properties", 1, "node",
+            {"j": {"__bytes__": "00"}, "e": {"__json__": 1}, "b": b"\x00", "n": [{"__bytes__": "ff"}]},
+        ]
+        assert _dec(json.loads(json.dumps(_enc(op)))) == op
+        assert _dec(json.loads(json.dumps(_enc({"__bytes__": "00"})))) == {"__bytes__": "00"}
+
 
 # -- durable engine semantics (Spark) ----------------------------------------
 
@@ -167,6 +177,36 @@ class TestDurableEngine:
         assert b.index_lookup("Name", "bob").count() == 0  # update replayed
         assert b.snapshot_at(v1).nb_nodes() == 2
         assert b.versions == a.versions
+
+    def test_open_graph_returns_durable_engine(self, spark, root):
+        a, b = open_graph(spark, root), open_graph(spark, root)
+        assert isinstance(a, DurableGraphEngine)
+        assert type(a) is type(b)
+
+    def test_uncommitted_writes_keep_history(self, spark, root):
+        """A long uncommitted session materializes its staged plans; it
+        never truncates the durable ledger."""
+        eng = open_graph(spark, root, checkpoint_every=2)
+        for i in range(3):
+            eng.add_node("P", {"k": i})
+            eng.commit()
+        for i in range(64):
+            eng.add_node("Q", {"k": i})
+        assert eng.versions == [0, 1, 2, 3]
+        assert eng.snapshot_at(1).nb_nodes() == 1
+        assert eng.current.nb_nodes() == 67
+
+    def test_tag_shaped_json_property_survives_reopen(self, spark, root):
+        eng = open_graph(spark, root)
+        nid = eng.add_node("P", {})
+        eng.set_properties(nid, "node", {"j": {"__bytes__": "00"}, "b": b"\x00"})
+        eng.commit()
+        rows = open_graph(spark, root).committed.props.filter("owner_kind = 'node'").collect()
+        got = {r["name"]: (r["dtype"], r["json_v"], r["bin_v"]) for r in rows}
+        assert got == {
+            "j": ("json", json.dumps({"__bytes__": "00"}), None),
+            "b": ("binary", None, bytearray(b"\x00")),
+        }
 
     def test_first_committer_wins_across_engines(self, spark, root):
         a = DurableGraphEngine(spark, root)

@@ -1,0 +1,246 @@
+"""Model-based test of the engine's one write path (hypothesis stateful).
+
+Random implicit writes (``add_node`` / ``set_properties`` /
+``update_node`` / ``delete_nodes``, and one unique-index registration)
+ended by ``commit`` or ``rollback``, with one-op ``begin()`` transactions
+committed while implicit staging is open, run against a pure-Python model
+of the committed head. After every commit the engine's head (nodes and node
+properties) must equal the model's, and every ``WriteConflict`` /
+``DuplicateIndexKey`` must be exactly the one the model predicts:
+first-committer-wins on write-set intersection, uniqueness over the merged
+state. The durable variant runs the same rules on ``open_graph`` with a
+checkpoint every other commit and finally compares a reopened store with
+the model. Grounding: the reference's interleaving specs
+(``LowLevelDB/test/.../MVCCSpec.hs``, ``STMGraph/test/.../RawSpec.hs``).
+"""
+
+from __future__ import annotations
+
+import shutil
+import tempfile
+
+from hypothesis import HealthCheck, settings
+from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    initialize,
+    precondition,
+    rule,
+    run_state_machine_as_test,
+)
+
+from hgraphstorage_spark import GraphEngine, open_graph
+from hgraphstorage_spark.engine import DuplicateIndexKey, WriteConflict
+
+KEYS = st.sampled_from(["a", "b", "c", "d"])
+PICK = st.integers(0, 1000)
+INDEX = ("by_k", ["N"], ["k"])
+
+
+def head_state(snap) -> tuple[dict, dict]:
+    nodes = {r["id"]: r["label"] for r in snap.nodes.collect()}
+    props: dict = {}
+    for r in snap.props.filter("owner_kind = 'node'").collect():
+        props.setdefault(r["owner_id"], {})[r["name"]] = r["text_v"]
+    return nodes, props
+
+
+class State:
+    """The oracle: a committed head as two dicts plus the registry flag."""
+
+    def __init__(self, nodes=None, props=None, indexed=False):
+        self.nodes: dict[int, str] = dict(nodes or {})
+        self.props: dict[int, dict] = {i: dict(p) for i, p in (props or {}).items()}
+        self.indexed = indexed
+
+    def copy(self) -> "State":
+        return State(self.nodes, self.props, self.indexed)
+
+    def apply(self, op: tuple) -> None:
+        kind, *args = op
+        if kind == "add":
+            nid, k = args
+            self.nodes[nid] = "N"
+            self.props[nid] = {"k": k}
+        elif kind == "set":
+            nid, k = args
+            self.props.setdefault(nid, {})["k"] = k
+        elif kind == "update":
+            nid, k = args
+            self.nodes[nid] = "N"
+            self.props[nid] = {"k": k}
+        elif kind == "delete":
+            (nid,) = args
+            self.nodes.pop(nid, None)
+            self.props.pop(nid, None)
+        elif kind == "index":
+            self.indexed = True
+
+    def violates_unique(self) -> bool:
+        if not self.indexed:
+            return False
+        keys = [self.props[i]["k"] for i in self.nodes if "k" in self.props.get(i, {})]
+        return len(keys) != len(set(keys))
+
+
+def written(ops) -> set[int]:
+    return {op[1] for op in ops if op[0] != "index"}
+
+
+class WritePathMachine(RuleBasedStateMachine):
+    def __init__(self, spark):
+        super().__init__()
+        self.spark = spark
+        self.eng = self.make_engine()
+        self.head = State()
+        self.version = 0
+        self.trail: list[tuple[int, set[int]]] = []  # (version, write-set)
+        self.implicit: dict | None = None  # {"start", "ops"}
+        self.ids: list[int] = []  # every id the engine minted
+
+    def make_engine(self):
+        return GraphEngine(self.spark)
+
+    # -- helpers -------------------------------------------------------------
+    def stage(self, op: tuple) -> None:
+        if self.implicit is None:
+            self.implicit = {"start": self.version, "ops": []}
+        self.implicit["ops"].append(op)
+
+    def publish(self, state: State, writes: set[int]) -> None:
+        self.version += 1
+        self.head = state
+        self.trail.append((self.version, writes))
+
+    def expected_commit(self, start: int, ops) -> tuple[str, State | None]:
+        mine = written(ops)
+        if any(v > start and w & mine for v, w in self.trail):
+            return "conflict", None
+        merged = self.head.copy()
+        for op in ops:
+            merged.apply(op)
+        if merged.violates_unique():
+            return "duplicate", None
+        return "ok", merged
+
+    def run_commit(self, commit, start: int, ops) -> bool:
+        outcome, merged = self.expected_commit(start, ops)
+        try:
+            version = commit()
+        except WriteConflict:
+            assert outcome == "conflict"
+            return False
+        except DuplicateIndexKey:
+            assert outcome == "duplicate"
+            return False
+        assert outcome == "ok", outcome
+        self.publish(merged, written(ops))
+        assert version == self.version
+        self.check_head()
+        return True
+
+    def check_head(self) -> None:
+        assert self.eng.committed.version == self.version
+        assert head_state(self.eng.committed) == (self.head.nodes, self.head.props)
+
+    def target(self, pick: int) -> int:
+        return self.ids[pick % len(self.ids)]
+
+    def mint(self, nid: int) -> int:
+        assert nid not in self.ids  # the engine-wide allocator never re-mints
+        self.ids.append(nid)
+        return nid
+
+    # -- rules ---------------------------------------------------------------
+    @initialize(k=KEYS)
+    def seed_node(self, k):
+        self.write("add", 0, k)
+        self.end(rollback=False)
+
+    @rule(kind=st.sampled_from(["add", "set", "update", "delete", "index"]), pick=PICK, k=KEYS)
+    def write(self, kind, pick, k):
+        """One implicit write. The unique index registers once: on a clean
+        engine it commits at once, with writes staged it joins them."""
+        if kind == "add":
+            self.stage(("add", self.mint(self.eng.add_node("N", {"k": k})), k))
+        elif kind == "set":
+            nid = self.target(pick)
+            self.eng.set_properties(nid, "node", {"k": k})
+            self.stage(("set", nid, k))
+        elif kind == "update":
+            nid = self.target(pick)
+            self.eng.update_node(nid, "N", {"k": k})
+            self.stage(("update", nid, k))
+        elif kind == "delete":
+            nid = self.target(pick)
+            self.eng.delete_nodes([nid])
+            self.stage(("delete", nid))
+        elif self.head.indexed or (self.implicit and ("index",) in self.implicit["ops"]):
+            return
+        elif self.implicit is None:
+            self.run_commit(lambda: self.eng.add_index(*INDEX) or self.version + 1, self.version, [("index",)])
+        else:
+            self.eng.add_index(*INDEX)
+            self.stage(("index",))
+
+    @precondition(lambda self: self.implicit is not None)
+    @rule(kind=st.sampled_from(["add", "set", "delete"]), pick=PICK, k=KEYS)
+    def concurrent_tx(self, kind, pick, k):
+        """A one-op begin() transaction committed while implicit staging
+        is open."""
+        tx = self.eng.begin()
+        if kind == "add":
+            op = ("add", self.mint(tx.add_node("N", {"k": k})), k)
+        elif kind == "set":
+            op = ("set", self.target(pick), k)
+            tx.set_properties(op[1], "node", {"k": k})
+        else:
+            op = ("delete", self.target(pick))
+            tx.delete_nodes([op[1]])
+        if not self.run_commit(tx.commit, self.version, [op]):
+            tx.rollback()
+
+    @precondition(lambda self: self.implicit is not None)
+    @rule(rollback=st.booleans())
+    def end(self, rollback):
+        """End the implicit transaction: commit (rolled back if it loses)
+        or roll back."""
+        if rollback or not self.run_commit(self.eng.commit, self.implicit["start"], self.implicit["ops"]):
+            self.eng.rollback()
+            self.check_head()
+        self.implicit = None
+
+    def teardown(self):
+        if self.implicit is not None:
+            self.end(rollback=False)
+
+
+class DurableWritePathMachine(WritePathMachine):
+    def make_engine(self):
+        self.root = tempfile.mkdtemp(prefix="hgs_model_")
+        return open_graph(self.spark, self.root, checkpoint_every=2)
+
+    def teardown(self):
+        try:
+            super().teardown()
+            reopened = open_graph(self.spark, self.root)
+            assert reopened.committed.version == self.version
+            assert head_state(reopened.committed) == (self.head.nodes, self.head.props)
+        finally:
+            shutil.rmtree(self.root, ignore_errors=True)
+
+
+SETTINGS = settings(
+    max_examples=5,
+    stateful_step_count=8,
+    deadline=None,
+    suppress_health_check=list(HealthCheck),
+)
+
+
+def test_write_path_matches_model(spark):
+    run_state_machine_as_test(lambda: WritePathMachine(spark), settings=SETTINGS)
+
+
+def test_durable_write_path_matches_model_after_reopen(spark):
+    run_state_machine_as_test(lambda: DurableWritePathMachine(spark), settings=SETTINGS)
