@@ -19,15 +19,23 @@ snapshots:
   (first-committer-wins) and publish it as a new version; rollback →
   discard staged state;
 - index registry + retroactive build + uniqueness (``HGraphStorage/src/
-  .../API.hs:494-516``) → index DataFrames rebuilt/maintained per commit,
-  ``DuplicateIndexKey`` raised on violation (parity with the reference's
-  exception, ``API.hs:217-229``).
+  .../API.hs:494-516``) → each snapshot derives its index DataFrames from
+  its own tables on first access (``GraphSnapshot.indexes``), so staged
+  reads see their own writes. The reference keeps unique indexes current
+  per written record and raises ``DuplicateIndexKey`` at the write that
+  breaks one (``API.hs:184-238``, ``:217-229``); here a commit checks only
+  the (name, key) pairs its ops wrote, against the merged state — every
+  published head was itself checked, so no other key can have become a
+  duplicate. Registering an index (the retroactive build,
+  ``APITest.hs:158-165``) or a bulk DataFrame write checks the whole index.
 """
 
 from __future__ import annotations
 
 from dataclasses import replace
-from typing import Mapping, Sequence
+from functools import reduce
+from operator import or_
+from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,9 +79,52 @@ def build_index(snap: GraphSnapshot, labels: Sequence[str], prop_names: Sequence
     )
 
 
-def check_unique(index_df: DataFrame, index_name: str) -> None:
+def written_index_keys(ops: Iterable[list], registry) -> dict[str, set[tuple[str, str]]]:
+    """The (name, key) pairs each registered index may have gained from
+    row-level op descriptors: node properties written by ``add_nodes``
+    rows, ``update_node`` and node ``set_properties``, keyed like
+    ``build_index`` (``schemas.canonical_string`` of each value, each
+    element of a multi-valued list). Deletes, edge properties and
+    unindexed names write no key. ``set_properties`` carries no label, so
+    its pairs go to every index on the name: the index holds only owners
+    with an indexed label, so probing them cannot find a false duplicate.
+    Indexes that gained no pair are left out."""
+    written = []  # (label, props); label None = unknown
+    for op in ops:
+        if op[0] == "add_nodes":
+            written += [(label, props) for label, props in op[1]]
+        elif op[0] == "update_node":
+            written.append((op[2], op[3]))
+        elif op[0] == "set_properties" and op[2] == schemas.NODE_KIND:
+            written.append((None, op[3]))
+    out = {}
+    for reg_name, labels, prop_names in registry:
+        pairs = {
+            (name, schemas.canonical_string(v))
+            for label, props in written
+            if label is None or not labels or label in labels
+            for name, value in props.items()
+            if name in prop_names
+            for v in (value if isinstance(value, list) else [value])
+        }
+        if pairs:
+            out[reg_name] = pairs
+    return out
+
+
+def check_unique(index_df: DataFrame, index_name: str, keys: set[tuple[str, str]] | None = None) -> None:
     """Uniqueness enforcement (reference ``checkDuplicates``): a unique
-    index admits one owner per (name, key)."""
+    index admits one owner per (name, key). ``keys`` restricts the check
+    to those (name, key) pairs — a commit passes the pairs its ops wrote
+    (``written_index_keys``), one filtered job; ``None`` checks the whole
+    index (index registration, bulk writes)."""
+    if keys is not None:
+        by_name: dict[str, list[str]] = {}
+        for name, key in sorted(keys):
+            by_name.setdefault(name, []).append(key)
+        index_df = index_df.filter(
+            reduce(or_, [(F.col("name") == name) & F.col("key").isin(ks) for name, ks in by_name.items()])
+        )
     dup = (
         index_df.groupBy("name", "key")
         .agg(F.countDistinct("owner_id").alias("n"))
@@ -109,8 +160,9 @@ class Transaction:
       non-conflicting concurrent committers all land (the Wikipedia
       example's tx1/tx3). Conflicts resolve first-committer-wins:
       a write-set intersection with any commit that landed after this
-      transaction started raises ``WriteConflict``, and unique indexes are
-      re-checked against the merged state (``DuplicateIndexKey``). A bulk
+      transaction started raises ``WriteConflict``, and the index keys the
+      ops wrote are checked for uniqueness against the merged state
+      (``DuplicateIndexKey``). A bulk
       DataFrame write has no op descriptor, so a transaction holding one
       raises ``WriteConflict`` whenever the head moved.
     """
@@ -167,7 +219,9 @@ class Transaction:
         # id, so their inserts are non-conflicting by construction. The
         # reservation is pinned in the descriptor, making replay stable.
         rows = [[label, dict(props or {})] for label, props in rows]
-        new_ids = list(ids) if ids is not None else self._engine._reserve_node_ids(len(rows), self._staged)
+        if ids is None:
+            self._staged, ids = self._engine._reserve_ids("node", len(rows), self._staged)
+        new_ids = list(ids)
         self._stage(["add_nodes", rows, new_ids], new_ids)
         return new_ids
 
@@ -176,7 +230,9 @@ class Transaction:
 
     def add_edges(self, rows, ids=None) -> list[int]:
         rows = [[src, dst, label, dict(props or {})] for src, dst, label, props in rows]
-        new_ids = list(ids) if ids is not None else self._engine._reserve_edge_ids(len(rows), self._staged)
+        if ids is None:
+            self._staged, ids = self._engine._reserve_ids("edge", len(rows), self._staged)
+        new_ids = list(ids)
         self._stage(["add_edges", rows, new_ids], new_ids)
         return new_ids
 
@@ -252,9 +308,15 @@ class Transaction:
                 merged = head
                 for op in self._ops:
                     merged = mutations.apply_op(merged, op)
-            merged = eng._rebuild_indexes(merged)
-            for reg_name, _labels, _prop_names in merged.index_registry:
-                check_unique(merged.indexes[reg_name], reg_name)
+            # the head was checked when it was published, so only keys
+            # these ops wrote can be new duplicates; an index registration
+            # or a bulk write can duplicate any key
+            if self._bulk or any(op[0] == "add_index" for op in self._ops):
+                checks = {reg_name: None for reg_name, _labels, _props in merged.index_registry}
+            else:
+                checks = written_index_keys(self._ops, merged.index_registry)
+            for reg_name, keys in checks.items():
+                check_unique(merged.indexes[reg_name], reg_name, keys)
             new_version = head.version + 1
             writes, ops = (None, None) if self._bulk else (set(self.written_ids), self._ops)
             kind = "implicit" if self is eng._implicit else "tx"
@@ -343,19 +405,19 @@ class GraphEngine:
         return True
 
     # -- engine-wide id allocation (shared across live transactions) -------
-    def _reserve_ids(self, kind: str, count: int, df: DataFrame, snap_max) -> list[int]:
-        current_max = snap_max if snap_max is not None else (
-            (df.agg(F.max("id").alias("m")).collect()[0]["m"]) or 0
-        )
-        base = max(self._id_high.get(kind, 0), current_max)
+    def _reserve_ids(self, kind: str, count: int, snap: GraphSnapshot) -> tuple[GraphSnapshot, list[int]]:
+        """Reserve ``count`` ids above both this engine's high-water mark
+        and the largest ``kind`` id in ``snap``. A snapshot whose largest
+        id is unknown (reopened, bulk-loaded) is scanned once; the snapshot
+        comes back with it recorded, so the next insert needs no scan."""
+        field = f"max_{kind}_id"
+        known = getattr(snap, field)
+        if known is None:
+            known = mutations.max_id(snap.nodes if kind == "node" else snap.edges)
+            snap = replace(snap, **{field: known})
+        base = max(self._id_high.get(kind, 0), known)
         self._id_high[kind] = base + count
-        return list(range(base + 1, base + count + 1))
-
-    def _reserve_node_ids(self, count: int, snap: GraphSnapshot) -> list[int]:
-        return self._reserve_ids("node", count, snap.nodes, snap.max_node_id)
-
-    def _reserve_edge_ids(self, count: int, snap: GraphSnapshot) -> list[int]:
-        return self._reserve_ids("edge", count, snap.edges, snap.max_edge_id)
+        return snap, list(range(base + 1, base + count + 1))
 
     # -- snapshot access (MVCC reads) -------------------------------------
     @property
@@ -457,18 +519,6 @@ class GraphEngine:
             except DuplicateIndexKey:
                 self.rollback()
                 raise
-
-    def _rebuild_indexes(self, snap: GraphSnapshot) -> GraphSnapshot:
-        """Index maintenance on commit (reference M1/M2 delta maintenance,
-        ``API.hs:184-238`` — we rebuild declaratively; the build is a
-        filtered scan so Catalyst incrementalizes nothing but costs one
-        pass over props)."""
-        if not snap.index_registry:
-            return snap
-        indexes = {}
-        for reg_name, labels, prop_names in snap.index_registry:
-            indexes[reg_name] = build_index(snap, labels, prop_names)
-        return replace(snap, indexes=indexes)
 
     def index_lookup(self, index_name: str, value) -> DataFrame:
         """Point lookup (reference trie ``lookup``, X3)."""

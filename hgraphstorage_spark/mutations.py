@@ -43,9 +43,16 @@ def _prop_rows(owner_id: int, owner_kind: str, props: Mapping[str, object]) -> l
     return rows
 
 
-def _next_id(df: DataFrame) -> int:
-    row = df.agg(F.max("id").alias("m")).collect()[0]
-    return (row["m"] or 0) + 1
+def max_id(df: DataFrame) -> int:
+    """The largest ``id`` in ``df`` (0 when empty): one aggregation job."""
+    return df.agg(F.max("id")).collect()[0][0] or 0
+
+
+def _merged_max(known: int | None, ids: list[int]) -> int | None:
+    """The id high-water mark after inserting ``ids``: a known mark merges
+    with them; an unknown one stays unknown (explicit ids below the real
+    maximum must not lower it)."""
+    return None if known is None else max([known, *ids])
 
 
 def add_nodes(
@@ -54,15 +61,17 @@ def add_nodes(
     """createObject batch (reference M1, ``API.hs:157-167``).
 
     ``rows`` is an iterable of (label, props). Returns (snapshot, new ids).
-    Index maintenance + uniqueness enforcement happen in
-    ``Transaction.commit``, the one commit path, against registered
-    indexes.
+    Index maintenance: none here — the new snapshot derives its indexes
+    from its own tables (``GraphSnapshot.indexes``). Uniqueness is checked
+    in ``Transaction.commit``, the one commit path, on the index keys the
+    rows wrote (``engine.written_index_keys``).
     """
     rows = list(rows)
     spark = snap.nodes.sparkSession
+    known = snap.max_node_id
     if ids is None:
-        start = (snap.max_node_id if snap.max_node_id is not None else _next_id(snap.nodes) - 1) + 1
-        ids = list(range(start, start + len(rows)))
+        known = known if known is not None else max_id(snap.nodes)
+        ids = list(range(known + 1, known + 1 + len(rows)))
     node_rows = [{"id": i, "label": label} for i, (label, _) in zip(ids, rows)]
     prop_rows = [r for i, (_, props) in zip(ids, rows) for r in _prop_rows(i, schemas.NODE_KIND, props)]
     new_nodes = spark.createDataFrame(node_rows, schemas.NODES_SCHEMA)
@@ -71,7 +80,7 @@ def add_nodes(
         snap,
         nodes=snap.nodes.unionByName(new_nodes),
         props=snap.props.unionByName(new_props) if new_props is not None else snap.props,
-        max_node_id=max(ids) if ids else snap.max_node_id,
+        max_node_id=_merged_max(known, ids),
         label_from_id=None,  # new ids need not follow the source's encoding
     )
     return out, ids
@@ -101,9 +110,10 @@ def add_edges(
     storage artifact we don't replicate (bag semantics)."""
     rows = list(rows)
     spark = snap.edges.sparkSession
+    known = snap.max_edge_id
     if ids is None:
-        start = (snap.max_edge_id if snap.max_edge_id is not None else _next_id(snap.edges) - 1) + 1
-        ids = list(range(start, start + len(rows)))
+        known = known if known is not None else max_id(snap.edges)
+        ids = list(range(known + 1, known + 1 + len(rows)))
     edge_rows = [
         {"id": i, "src": src, "dst": dst, "label": label} for i, (src, dst, label, _) in zip(ids, rows)
     ]
@@ -114,7 +124,7 @@ def add_edges(
         snap,
         edges=snap.edges.unionByName(new_edges),
         props=snap.props.unionByName(new_props) if new_props is not None else snap.props,
-        max_edge_id=max(ids) if ids else snap.max_edge_id,
+        max_edge_id=_merged_max(known, ids),
         label_from_id=None,  # new edges may reference out-of-scheme endpoints
     )
     return out, ids
@@ -223,8 +233,9 @@ def apply_op(snap: GraphSnapshot, op: list) -> GraphSnapshot:
     - ``["update_node", node_id, label, props]``
     - ``["delete_nodes", ids]`` / ``["delete_edges", ids]``
     - ``["set_properties", owner_id, owner_kind, props]``
-    - ``["add_index", name, labels, prop_names]`` — registers only; the
-      index DataFrame is built (and uniqueness checked) at commit.
+    - ``["add_index", name, labels, prop_names]`` — registers only; each
+      snapshot derives the index DataFrame, and the commit checks
+      uniqueness over the whole index.
 
     Ids are pinned in the descriptor, so replay onto a different head
     produces the same delta."""

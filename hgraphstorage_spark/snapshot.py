@@ -10,6 +10,7 @@ MVCC/snapshot isolation (``LowLevelDB/src/.../MVCC.hs:271-298``) free.
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,9 +32,8 @@ class GraphSnapshot:
     props: DataFrame
     version: int = 0
     # index registry: name -> (labels tuple, prop names tuple); index data
-    # lives in `indexes` as DataFrames conforming to INDEX_SCHEMA
+    # is derived from it in `indexes`
     index_registry: tuple = field(default_factory=tuple)
-    indexes: dict = field(default_factory=dict)
     # ID high-water marks (reference ``MaxIDs`` singleton record,
     # ``Types.hs:296-304``): deleted ids are never reused (divergence from
     # the reference's free lists — SURVEY.md §7). None = unknown (bulk
@@ -49,6 +49,17 @@ class GraphSnapshot:
     # shuffling the node set. Mutations that can break the encoding
     # (adding/relabeling nodes) must clear it.
     label_from_id: object = None
+
+    @cached_property
+    def indexes(self) -> dict:
+        """name -> index DataFrame (INDEX_SCHEMA) for every registered
+        index, derived from this snapshot's own tables on first access and
+        cached on this object. Every mutation makes a new snapshot
+        (``replace``), so an index never outlives the tables it was built
+        from; building is plan construction only, no Spark job."""
+        from hgraphstorage_spark.engine import build_index
+
+        return {name: build_index(self, labels, props) for name, labels, props in self.index_registry}
 
     # -- reference A1: maintained counters (STMGraph nbNodes/nbEdges,
     # STMGraph/src/.../API.hs:49-53). Spark-side these are actions.

@@ -20,8 +20,8 @@ committed versions** on shared storage:
   plus every ``checkpoint_every``-th commit so replay chains stay
   bounded — the classic log+checkpoint recovery design).
 - Open/refresh reconstructs state: read the latest materialized snapshot
-  at-or-below the head, replay the ops of later entries, rebuild indexes
-  from the persisted registry.
+  at-or-below the head, replay the ops of later entries, restore the
+  persisted index registry (the snapshot derives its indexes from it).
 
 Write-sets ride in each entry, so first-committer-wins holds ACROSS
 processes exactly as it does in-process: a transaction in engine B
@@ -377,9 +377,7 @@ class DurableGraphEngine(GraphEngine):
             (name, tuple(labels), tuple(props))
             for name, labels, props in (entries[-1]["registry"] if entries else [])
         )
-        snap = replace(snap, index_registry=registry)
-        snap = self._rebuild_indexes(snap) if registry else snap
-        return snap.with_version(version)
+        return replace(snap, index_registry=registry, version=version)
 
     def _refresh(self) -> None:
         head = self.ledger.head_version()
@@ -495,10 +493,12 @@ class DurableGraphEngine(GraphEngine):
         if materialize:
             # swap in the parquet-backed plan: bounded lineage for this
             # process, and identical to what any other process reads
-            reread = GraphSnapshot.read(self.spark, full, version=v)
-            reread = replace(reread, index_registry=snapshot.index_registry)
-            reread = self._rebuild_indexes(reread) if snapshot.index_registry else reread
-            snapshot = reread
+            snapshot = replace(
+                GraphSnapshot.read(self.spark, full, version=v),
+                index_registry=snapshot.index_registry,
+                max_node_id=snapshot.max_node_id,
+                max_edge_id=snapshot.max_edge_id,
+            )
         self._ledger.append(snapshot)
         return True
 

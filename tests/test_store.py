@@ -196,6 +196,23 @@ class TestDurableEngine:
         assert eng.snapshot_at(1).nb_nodes() == 1
         assert eng.current.nb_nodes() == 67
 
+    def test_reopened_allocator_never_remints(self, spark, root):
+        """An explicit id below the store's largest, inserted after a
+        reopen, must not lower the id high-water mark."""
+        eng = open_graph(spark, root, checkpoint_every=2)
+        ids = eng.add_nodes([("P", {}) for _ in range(10)])
+        eng.commit()
+        eng.delete_nodes([ids[4]])
+        eng.commit()  # version 2 checkpoints
+        assert eng.committed.max_node_id == max(ids)  # kept across the reread
+        eng = open_graph(spark, root, checkpoint_every=2)
+        eng.add_nodes([("P", {})], ids=[ids[4]])
+        eng.commit()
+        assert eng.add_node("P") not in ids
+        eng.commit()
+        node_ids = [r["id"] for r in eng.committed.nodes.collect()]
+        assert len(node_ids) == len(set(node_ids)) == 11
+
     def test_tag_shaped_json_property_survives_reopen(self, spark, root):
         eng = open_graph(spark, root)
         nid = eng.add_node("P", {})

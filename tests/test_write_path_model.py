@@ -1,7 +1,8 @@
 """Model-based test of the engine's one write path (hypothesis stateful).
 
 Random implicit writes (``add_node`` / ``set_properties`` /
-``update_node`` / ``delete_nodes``, and one unique-index registration)
+``update_node`` / ``delete_nodes``, and one unique-index registration),
+over an indexed and an unindexed label and property,
 ended by ``commit`` or ``rollback``, with one-op ``begin()`` transactions
 committed while implicit staging is open, run against a pure-Python model
 of the committed head. After every commit the engine's head (nodes and node
@@ -35,6 +36,8 @@ from hgraphstorage_spark.engine import DuplicateIndexKey, WriteConflict
 KEYS = st.sampled_from(["a", "b", "c", "d"])
 PICK = st.integers(0, 1000)
 INDEX = ("by_k", ["N"], ["k"])
+LABELS = st.sampled_from(["N", "M"])  # M is not indexed
+NAMES = st.sampled_from(["k", "j"])  # j is not indexed
 
 
 def head_state(snap) -> tuple[dict, dict]:
@@ -58,17 +61,13 @@ class State:
 
     def apply(self, op: tuple) -> None:
         kind, *args = op
-        if kind == "add":
-            nid, k = args
-            self.nodes[nid] = "N"
-            self.props[nid] = {"k": k}
+        if kind in ("add", "update"):
+            nid, label, name, k = args
+            self.nodes[nid] = label
+            self.props[nid] = {name: k}
         elif kind == "set":
-            nid, k = args
-            self.props.setdefault(nid, {})["k"] = k
-        elif kind == "update":
-            nid, k = args
-            self.nodes[nid] = "N"
-            self.props[nid] = {"k": k}
+            nid, name, k = args
+            self.props.setdefault(nid, {})[name] = k
         elif kind == "delete":
             (nid,) = args
             self.nodes.pop(nid, None)
@@ -79,7 +78,9 @@ class State:
     def violates_unique(self) -> bool:
         if not self.indexed:
             return False
-        keys = [self.props[i]["k"] for i in self.nodes if "k" in self.props.get(i, {})]
+        keys = [
+            self.props[i]["k"] for i, label in self.nodes.items() if label == "N" and "k" in self.props.get(i, {})
+        ]
         return len(keys) != len(set(keys))
 
 
@@ -154,23 +155,29 @@ class WritePathMachine(RuleBasedStateMachine):
     # -- rules ---------------------------------------------------------------
     @initialize(k=KEYS)
     def seed_node(self, k):
-        self.write("add", 0, k)
+        self.write("add", 0, k, "N", "k")
         self.end(rollback=False)
 
-    @rule(kind=st.sampled_from(["add", "set", "update", "delete", "index"]), pick=PICK, k=KEYS)
-    def write(self, kind, pick, k):
+    @rule(
+        kind=st.sampled_from(["add", "set", "update", "delete", "index"]),
+        pick=PICK,
+        k=KEYS,
+        label=LABELS,
+        name=NAMES,
+    )
+    def write(self, kind, pick, k, label, name):
         """One implicit write. The unique index registers once: on a clean
         engine it commits at once, with writes staged it joins them."""
         if kind == "add":
-            self.stage(("add", self.mint(self.eng.add_node("N", {"k": k})), k))
+            self.stage(("add", self.mint(self.eng.add_node(label, {name: k})), label, name, k))
         elif kind == "set":
             nid = self.target(pick)
-            self.eng.set_properties(nid, "node", {"k": k})
-            self.stage(("set", nid, k))
+            self.eng.set_properties(nid, "node", {name: k})
+            self.stage(("set", nid, name, k))
         elif kind == "update":
             nid = self.target(pick)
-            self.eng.update_node(nid, "N", {"k": k})
-            self.stage(("update", nid, k))
+            self.eng.update_node(nid, label, {name: k})
+            self.stage(("update", nid, label, name, k))
         elif kind == "delete":
             nid = self.target(pick)
             self.eng.delete_nodes([nid])
@@ -190,9 +197,9 @@ class WritePathMachine(RuleBasedStateMachine):
         is open."""
         tx = self.eng.begin()
         if kind == "add":
-            op = ("add", self.mint(tx.add_node("N", {"k": k})), k)
+            op = ("add", self.mint(tx.add_node("N", {"k": k})), "N", "k", k)
         elif kind == "set":
-            op = ("set", self.target(pick), k)
+            op = ("set", self.target(pick), "k", k)
             tx.set_properties(op[1], "node", {"k": k})
         else:
             op = ("delete", self.target(pick))
