@@ -305,10 +305,10 @@ def q_index_prefix(spark, sf_dir):
 
 def q_mutation_cascade(spark, sf_dir):
     """M5 deleteObject cascade: delete customer 1, count surviving edges per label."""
-    from hgraphstorage_spark.mutations import delete_nodes
+    from hgraphstorage_spark.mutations import apply_op
 
     snap = _graph(spark, sf_dir)
-    after = delete_nodes(snap, [NODE["Customer"] + 1])
+    after = apply_op(snap, ["delete_nodes", [NODE["Customer"] + 1]])
     return after.edges.groupBy("label").agg(F.count(F.lit(1)).alias("cnt"))
 
 

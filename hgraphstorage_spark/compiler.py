@@ -15,9 +15,10 @@ Scale design:
   needs it, so an N-hop chain is N joins against ``edges``, not 2N;
 - small frontiers (``NID`` with few ids) mark the frontier side
   broadcastable so a 100 TB edge table is probed, not shuffled;
-- ``Has`` compiles to a semi-join against the props table — or against a
-  registered index DataFrame when one covers (label, name), the
-  compiler-level index-selection rewrite of SURVEY.md §4;
+- ``Has`` compiles to a semi-join against the props table, whether or not
+  an index is registered on the name: the props predicate matches on the
+  value's dtype, and a checkpointed snapshot's props are partitioned by
+  (owner_kind, name), so the scan is already pruned to that name;
 - everything else (pushdown, empty-relation propagation, join strategy)
   is left to Catalyst + AQE on purpose.
 """
@@ -254,20 +255,6 @@ def _apply_has(st: _State, step: tr.Has) -> None:
     if st.kind not in (KIND_NODES, KIND_EDGES):
         raise TraversalError(f"Has applied to {st.kind}")
     kind = schemas.NODE_KIND if st.kind == KIND_NODES else schemas.EDGE_KIND
-
-    # compiler-level index selection (SURVEY.md §4): a registered index on
-    # this property name replaces the props semi-join with an index probe
-    if st.kind == KIND_NODES:
-        for reg_name, labels, prop_names in snap.index_registry:
-            if step.name in prop_names and reg_name in snap.indexes:
-                idx = snap.indexes[reg_name]
-                key = schemas.canonical_string(step.value)
-                matches = idx.filter((F.col("name") == step.name) & (F.col("key") == key)).select(
-                    F.col("owner_id").alias("id")
-                )
-                st.df = st.df.join(F.broadcast(matches), "id", "left_semi")
-                st.small_frontier = True
-                return
 
     owners = (
         snap.props.filter(

@@ -8,14 +8,15 @@ snapshots:
   snapshot versions; every write runs in a ``Transaction`` — one opened
   by ``begin()``, or the engine's implicit one, which its own write
   methods stage into and ``commit()`` / ``rollback()`` end. One write
-  path: each mutation is one op descriptor applied by
-  ``mutations.apply_op``, and ``Transaction.commit`` is the one commit;
+  path: each mutation is one op descriptor folded by
+  ``mutations.apply_op`` into a driver-side overlay per table, and
+  ``Transaction.commit`` is the one commit;
 - MVCC visibility (``MVCC.hs:271-298``, the PostgreSQL rule) → a reader
   pins a committed snapshot version: everything in it is "committed before
   my start", everything staged by others simply isn't in it. Uncommitted
   writes are visible only through the transaction's own staged snapshot —
   the two halves of the reference's visibility predicate;
-- commit (``MVCC.hs:220-225``) → replay the op log onto the ledger head
+- commit (``MVCC.hs:220-225``) → fold the op log onto the ledger head
   (first-committer-wins) and publish it as a new version; rollback →
   discard staged state;
 - index registry + retroactive build + uniqueness (``HGraphStorage/src/
@@ -62,10 +63,9 @@ def build_index(snap: GraphSnapshot, labels: Sequence[str], prop_names: Sequence
     """Retroactive index build (reference ``addIndex`` full fold,
     ``API.hs:494-516``): scan props once, project canonical string keys.
 
-    Scale: one filtered scan + narrow projection — no shuffle. The index
-    DataFrame is small relative to the graph and broadcastable at probe
-    time (see compiler._apply_has).
-    """
+    Scale: one filtered scan + narrow projection — no shuffle. It backs
+    uniqueness and ``index_lookup``/``index_prefix``; ``has()`` reads props,
+    as a key carries neither the index's label scope nor the value dtype."""
     props = snap.props.filter(F.col("owner_kind") == schemas.NODE_KIND)
     props = props.filter(F.col("name").isin(list(prop_names)))
     owners = snap.nodes
@@ -154,10 +154,12 @@ class Transaction:
       after start are never visible (``"doesn't see data added committed
       after it started"``), and rows they delete remain visible
       (``"still sees data deleted and committed after it started"``);
-    - each write is recorded once, as its op descriptor, and applied with
-      ``mutations.apply_op`` to the staged snapshot (for reads-own-writes);
-    - ``commit()`` replays the op log onto the CURRENT ledger head, so
-      non-conflicting concurrent committers all land (the Wikipedia
+    - each write is recorded once, as its op descriptor, and folded by
+      ``mutations.apply_op`` into the staged snapshot's driver-side
+      overlay (for reads-own-writes), so a staged read plans the same
+      however many writes are staged;
+    - ``commit()`` folds the op log onto the CURRENT ledger head's overlay,
+      so non-conflicting concurrent committers all land (the Wikipedia
       example's tx1/tx3). Conflicts resolve first-committer-wins:
       a write-set intersection with any commit that landed after this
       transaction started raises ``WriteConflict``, and the index keys the
@@ -193,24 +195,15 @@ class Transaction:
             raise RuntimeError(f"transaction already {self._done}")
 
     def _stage(self, op: list, written_ids) -> None:
-        """Apply one op descriptor to the staged snapshot and log it for
-        commit-time replay. Every ``COMPACT_EVERY`` ops the staged plans
-        are materialized (localCheckpoint) — the Spark analogue of the
-        reference's write buffering (GraphSettings buffer modes,
-        ``HGraphStorage/src/.../Types.hs:430-439``): per-record plan growth
-        would otherwise make the Nth single-row write pay an N-branch
-        union."""
+        """Fold one op descriptor into the staged snapshot's overlay and log
+        it for commit-time replay. The overlay buffers row-level writes on
+        the driver — the Spark analogue of the reference's write buffering
+        (GraphSettings buffer modes, ``HGraphStorage/src/.../Types.hs:430-439``):
+        the Nth single-row write adds rows to one local relation per table,
+        not a branch to the plan."""
         self._check_open()
-        snap = mutations.apply_op(self._staged, op)
+        self._staged = mutations.apply_op(self._staged, op)
         self._ops.append(op)
-        if len(self._ops) % self._engine.COMPACT_EVERY == 0:
-            snap = replace(
-                snap,
-                nodes=snap.nodes.localCheckpoint(),
-                edges=snap.edges.localCheckpoint(),
-                props=snap.props.localCheckpoint(),
-            )
-        self._staged = snap
         self.written_ids.update(written_ids)
 
     def add_nodes(self, rows, ids=None) -> list[int]:
@@ -255,12 +248,12 @@ class Transaction:
         """Bulk form (the scale path): its write-set is unenumerated and it
         has no op descriptor — the durable ledger materializes it."""
         self._check_open()
-        self._staged = mutations.add_nodes_df(self._staged, nodes, props)
+        self._staged = mutations.add_df(self._staged, "nodes", nodes, props)
         self._bulk = True
 
     def add_edges_df(self, edges: DataFrame, props: DataFrame | None = None) -> None:
         self._check_open()
-        self._staged = mutations.add_edges_df(self._staged, edges, props)
+        self._staged = mutations.add_df(self._staged, "edges", edges, props)
         self._bulk = True
 
     # -- outcome -----------------------------------------------------------
@@ -305,9 +298,7 @@ class Transaction:
                             f"version {version} after this transaction started at "
                             f"version {self.start_version}"
                         )
-                merged = head
-                for op in self._ops:
-                    merged = mutations.apply_op(merged, op)
+                merged = mutations.apply_op(head, *self._ops)
             # the head was checked when it was published, so only keys
             # these ops wrote can be new duplicates; an index registration
             # or a bulk write can duplicate any key
@@ -347,10 +338,6 @@ class GraphEngine:
     """Engine session: a ledger of committed snapshots. The engine's own
     write methods stage into one implicit :class:`Transaction`, begun at
     the first write; ``commit()`` / ``rollback()`` end it."""
-
-    # staged ops between materializations of a transaction's plans
-    # (see Transaction._stage)
-    COMPACT_EVERY = 64
 
     def __init__(self, spark: SparkSession, snapshot: GraphSnapshot | None = None):
         self.spark = spark
@@ -408,12 +395,12 @@ class GraphEngine:
     def _reserve_ids(self, kind: str, count: int, snap: GraphSnapshot) -> tuple[GraphSnapshot, list[int]]:
         """Reserve ``count`` ids above both this engine's high-water mark
         and the largest ``kind`` id in ``snap``. A snapshot whose largest
-        id is unknown (reopened, bulk-loaded) is scanned once; the snapshot
-        comes back with it recorded, so the next insert needs no scan."""
+        id is unknown (reopened, bulk-loaded) is scanned once, deleted rows
+        included; it comes back with the mark recorded."""
         field = f"max_{kind}_id"
         known = getattr(snap, field)
         if known is None:
-            known = mutations.max_id(snap.nodes if kind == "node" else snap.edges)
+            known = mutations.max_id(snap, kind)
             snap = replace(snap, **{field: known})
         base = max(self._id_high.get(kind, 0), known)
         self._id_high[kind] = base + count

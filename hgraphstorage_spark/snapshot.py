@@ -49,6 +49,9 @@ class GraphSnapshot:
     # shuffling the node set. Mutations that can break the encoding
     # (adding/relabeling nodes) must clear it.
     label_from_id: object = None
+    # the driver-side delta these tables were built from by row-level
+    # writes (``mutations.apply_op``); None = the tables are their own base
+    _overlay: object = field(default=None, compare=False, repr=False)
 
     @cached_property
     def indexes(self) -> dict:

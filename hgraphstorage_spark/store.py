@@ -15,12 +15,14 @@ committed versions** on shared storage:
   against the new entries and retry at N+1. (On HDFS/S3 the same CAS is
   rename-without-overwrite / conditional PUT.)
 - Each entry carries EITHER a serialized **mutation-op log** (row-level
-  commits — tiny JSON, replayed on open) OR a **materialized snapshot
+  commits — tiny JSON, folded on open) OR a **materialized snapshot
   path** (bulk DataFrame ingests, whose op log would be the data itself,
-  plus every ``checkpoint_every``-th commit so replay chains stay
-  bounded — the classic log+checkpoint recovery design).
+  plus every ``checkpoint_every``-th commit so the op suffix stays
+  bounded — the classic log+checkpoint recovery design). A checkpoint
+  writes the head; its reread is the next base, with an empty overlay.
 - Open/refresh reconstructs state: read the latest materialized snapshot
-  at-or-below the head, replay the ops of later entries, restore the
+  at-or-below the head, fold the ops of the later entries into one
+  driver-side overlay per table (``mutations.apply_op``), restore the
   persisted index registry (the snapshot derives its indexes from it).
 
 Write-sets ride in each entry, so first-committer-wins holds ACROSS
@@ -29,11 +31,13 @@ conflicts with a commit engine A published after B's start version.
 
 Scale notes: ledger entries are metadata (ids + op descriptors), never
 data; materialized snapshots go through ``GraphSnapshot.write``'s
-partitioned parquet layout; reconstruction reads one snapshot + replays
-a bounded op suffix. Id allocation stays per-engine — concurrent
-processes inserting fresh entities should partition the id space (pass
-explicit ids) or treat ``WriteConflict`` as the retry signal, the same
-contract the reference's STM retry loop exposes.
+partitioned parquet layout; reconstruction reads one snapshot + folds
+a bounded op suffix, so the head's plan is that snapshot's scans filtered
+and unioned with one local relation per table. Id allocation stays
+per-engine — concurrent processes inserting fresh entities should
+partition the id space (pass explicit ids) or treat ``WriteConflict`` as
+the retry signal, the same contract the reference's STM retry loop
+exposes.
 """
 
 from __future__ import annotations
@@ -360,19 +364,14 @@ class DurableGraphEngine(GraphEngine):
                 f"version {version} predates the compaction horizon "
                 "(its ledger entries were folded into a later checkpoint)"
             )
-        base_idx, snap = -1, GraphSnapshot.empty(spark)
-        for i in range(len(entries) - 1, -1, -1):
-            if entries[i].get("snapshot"):
-                base_idx = i
-                snap = GraphSnapshot.read(
-                    spark,
-                    os.path.join(self.root, entries[i]["snapshot"]),
-                    version=entries[i]["version"],
-                )
-                break
-        for e in entries[base_idx + 1 :]:
-            for op in e.get("ops") or []:
-                snap = mutations.apply_op(snap, _dec(op))
+        ckpt = next((i for i in reversed(range(len(entries))) if entries[i].get("snapshot")), -1)
+        if ckpt < 0:
+            snap = GraphSnapshot.empty(spark)
+        else:
+            path = os.path.join(self.root, entries[ckpt]["snapshot"])
+            snap = GraphSnapshot.read(spark, path, version=entries[ckpt]["version"])
+        ops = [_dec(op) for e in entries[ckpt + 1 :] for op in e.get("ops") or []]
+        snap = mutations.apply_op(snap, *ops)
         registry = tuple(
             (name, tuple(labels), tuple(props))
             for name, labels, props in (entries[-1]["registry"] if entries else [])

@@ -81,8 +81,7 @@ class TestIndex:
         assert actor_engine.index_lookup("LastName", "Cruise").count() == 0
 
     def test_has_uses_index_rewrite(self, actor_engine):
-        # compiler rewrites Has(lastName=...) into an index probe; result
-        # must be identical to the un-indexed semi-join
+        # registering an index does not change what has() returns
         before = sorted(actor_engine.traverse(T().ns().has("lastName", "Ryan")).ids())
         actor_engine.add_index("LastName", labels=["Actor"], prop_names=["lastName"])
         after = sorted(actor_engine.traverse(T().ns().has("lastName", "Ryan")).ids())
@@ -95,6 +94,27 @@ class TestIndex:
         actor_engine.commit()
         assert [r[0] for r in actor_engine.current.index_registry] == ["LastName"]
         assert bag(actor_engine.index_lookup("LastName", "Kilmer"), ["owner_id"]) == [(4,)]
+
+
+class TestHasIgnoresIndexes:
+    """``has()`` reads the props table whether or not an index covers the
+    name: an index key carries neither the index's label scope nor the
+    value's dtype."""
+
+    @pytest.fixture()
+    def indexed(self, spark):
+        eng = GraphEngine(spark)
+        eng.add_nodes([("A", {"name": "x"}), ("B", {"name": "y"}), ("A", {"name": "5"})])
+        eng.commit()
+        eng.add_index("by_name", ["A"], ["name"])
+        return eng
+
+    def test_has_matches_outside_the_index_label_scope(self, indexed):
+        assert indexed.traverse(T().ns().has("name", "y")).ids() == [2]
+
+    def test_has_matches_the_value_dtype(self, indexed):
+        assert indexed.traverse(T().ns().has("name", 5)).ids() == []
+        assert indexed.traverse(T().ns().has("name", "5")).ids() == [3]
 
 
 class TestStagedIndexReads:

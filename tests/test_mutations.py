@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from hgraphstorage_spark import GraphEngine, T
+from hgraphstorage_spark import GraphEngine, GraphSnapshot, T, schemas
 from hgraphstorage_spark.query_step import list_properties
 
 from tests.conftest import bag
@@ -76,11 +76,10 @@ class TestCrud:
 class TestCompaction:
     @pytest.mark.slow
     def test_long_mutation_session_compacts_and_preserves_state(self, spark):
-        """Row-at-a-time sessions cross the COMPACT_EVERY threshold: the
-        staged plan is materialized, and every row (nodes, edges, props)
-        survives compaction + commit."""
+        """A long row-at-a-time session keeps every row (nodes, edges,
+        props) across commit."""
         eng = GraphEngine(spark)
-        n = GraphEngine.COMPACT_EVERY + 8
+        n = 72
         for i in range(n):
             eng.add_node("N", {"k": i})
         ids = list(range(1, n + 1))
@@ -93,6 +92,122 @@ class TestCompaction:
         assert snap.props.count() == n
         res = eng.traverse(T().nid(ids[0]).out("next"))
         assert [r["id"] for r in res.df.collect()] == [ids[1]]
+
+
+def _n_ops(df) -> int:
+    """Logical operators in ``df``'s analyzed plan."""
+
+    def count(plan) -> int:
+        kids = plan.children()
+        return 1 + sum(count(kids.apply(i)) for i in range(kids.size()))
+
+    return count(df._jdf.queryExecution().analyzed())
+
+
+def _base_engine(spark, n=12) -> GraphEngine:
+    """An engine over a pre-loaded snapshot (its tables are the base):
+    nodes 1..n, edges i -> i+1 with id i, one property on each."""
+    nodes = spark.createDataFrame([(i, "N") for i in range(1, n + 1)], schemas.NODES_SCHEMA)
+    edges = spark.createDataFrame([(i, i, i + 1, "r") for i in range(1, n)], schemas.EDGES_SCHEMA)
+    props = spark.createDataFrame(
+        [{"owner_id": i, "owner_kind": "node", "name": "k", "seq": 0, **schemas.value_columns(i)} for i in range(1, n + 1)]
+        + [{"owner_id": i, "owner_kind": "edge", "name": "w", "seq": 0, **schemas.value_columns(i)} for i in range(1, n)],
+        schemas.PROPS_SCHEMA,
+    )
+    return GraphEngine(spark, GraphSnapshot(nodes=nodes, edges=edges, props=props))
+
+
+class TestOverlayFold:
+    """Row-level writes fold into one driver-side overlay per table: a
+    head's plan has the same shape whatever the number of ops, and the
+    fold keeps the op-order semantics of the write API."""
+
+    @staticmethod
+    def _session(eng, n: int, commit_each: bool) -> dict:
+        """``n`` single-row ops (a multiple of 5), cycling through add,
+        edge add, set_properties, delete_edges and delete_nodes; the
+        operator counts of the head's three tables."""
+        for i in range(n // 5):
+            a = eng.add_node("N", {"k": -i})
+            writes = [
+                lambda: eng.add_edge(a, 1, "r", {"w": -i}),
+                lambda: eng.set_properties(1, "node", {"k": i, "j": []}),
+                lambda: eng.delete_edges([i + 1]),
+                lambda: eng.delete_nodes([i + 2]),
+            ]
+            for write in writes:
+                if commit_each:
+                    eng.commit()
+                write()
+        if commit_each:
+            eng.commit()
+        head = eng.current
+        return {"nodes": _n_ops(head.nodes), "edges": _n_ops(head.edges), "props": _n_ops(head.props)}
+
+    @pytest.mark.parametrize("commit_each", [False, True], ids=["one_transaction", "across_commits"])
+    def test_plan_depth_is_independent_of_op_count(self, spark, commit_each):
+        few = self._session(_base_engine(spark), 5, commit_each)
+        many_eng = _base_engine(spark)
+        many = self._session(many_eng, 40, commit_each)
+        assert few == many
+        head = many_eng.current
+        assert head.nb_nodes() == 12 + 8 - 8
+        assert bag(head.edges, ["src", "dst"]) == [(10, 11), (11, 12)] + [(i, 1) for i in range(13, 21)]
+
+    def test_delete_then_readd_keeps_no_base_edges(self, spark):
+        eng = _base_engine(spark, n=3)
+        eng.delete_nodes([2])
+        eng.add_nodes([("N", {})], ids=[2])
+        eng.add_edge(1, 2, "r")  # added after its endpoint was deleted: kept
+        eng.commit()
+        assert bag(eng.current.edges, ["id", "src", "dst"]) == [(3, 1, 2)]
+        assert bag(eng.current.props, ["owner_kind", "owner_id"]) == [("node", 1), ("node", 3)]
+
+    def test_cascade_drops_props_set_on_a_base_edge(self, spark):
+        eng = _base_engine(spark, n=3)
+        eng.set_properties(1, "edge", {"x": "y"})
+        eng.delete_nodes([2])
+        eng.commit()
+        assert bag(eng.current.props.filter("owner_kind = 'edge'"), ["owner_id"]) == []
+
+    def test_props_on_a_missing_edge_follow_op_order(self, spark):
+        """An edge property whose edge does not exist is dropped by a
+        later ``delete_nodes``, and kept when set after the last one."""
+        eng = _base_engine(spark, n=3)
+        eng.set_properties(98, "edge", {"x": 1})
+        eng.delete_nodes([3])
+        eng.set_properties(99, "edge", {"x": 1})
+        eng.commit()
+        assert bag(eng.current.props.filter("owner_kind = 'edge'"), ["owner_id"]) == [(1,), (99,)]
+
+    def test_set_properties_replaces_names_with_quotes(self, spark):
+        """The overlay excludes a replaced base property by a SQL key; a
+        name with quotes and backslashes must match itself."""
+        odd = "it's a \\'name\\"
+        base = _base_engine(spark, n=2).current
+        row = {"owner_id": 1, "owner_kind": "node", "name": odd, "seq": 0, **schemas.value_columns("a")}
+        props = base.props.unionByName(spark.createDataFrame([row], schemas.PROPS_SCHEMA))
+        eng = GraphEngine(spark, GraphSnapshot(nodes=base.nodes, edges=base.edges, props=props))
+        eng.set_properties(1, "node", {odd: "c"})
+        eng.commit()
+        got = {(r["name"], r["text_v"]) for r in eng.current.props.filter("owner_id = 1 AND owner_kind = 'node'").collect()}
+        assert got == {(odd, "c"), ("k", None)}
+
+    def test_add_of_a_present_id_keeps_both_rows(self, spark):
+        eng = _base_engine(spark, n=3)
+        eng.add_nodes([("M", {})], ids=[1])
+        eng.commit()
+        assert bag(eng.current.nodes.filter("id = 1")) == [(1, "M"), (1, "N")]
+
+    def test_update_of_a_missing_id_inserts(self, spark):
+        eng = _base_engine(spark, n=3)
+        eng.update_node(7, "M", {"k": "v"})
+        eng.update_node(1, "M", {})
+        eng.commit()
+        assert bag(eng.current.nodes) == [(1, "M"), (2, "N"), (3, "N"), (7, "M")]
+        assert bag(eng.current.props.filter("owner_kind = 'node'"), ["owner_id", "name"]) == [
+            (2, "k"), (3, "k"), (7, "k")
+        ]
 
 
 class TestVersioning:
